@@ -23,6 +23,7 @@ carried its own copy of the discipline, or none):
 from __future__ import annotations
 
 import time
+import warnings
 
 
 def await_terminated(q, timeout: int = 300) -> None:
@@ -79,6 +80,12 @@ def drain_and_stop(q, timeout: int = 60) -> None:
         assert drained or saw_data, (
             f"streaming query committed no data batch within {timeout}s"
         )
+        if not drained:
+            warnings.warn(
+                f"streaming query {q.name or q.id} stopped before draining: "
+                f"{prog[-1]['batchId'] + 1} batches committed within {timeout}s",
+                stacklevel=2,
+            )
     finally:
         if q.isActive:
             q.stop()

@@ -745,120 +745,125 @@ def test_dup_span_coverage_shuffles_hashes_not_text(spark, sf_dir):
             assert "toks" not in ln and "text" not in ln, ln
 
 
+def test_bench_summary_median_iqr_and_cold_split():
+    """bench.py's summary rule on known samples: sample 0 is cold and
+    kept apart, the other 7 are warm; each query reports the median
+    and the exclusive-quartile IQR (2nd to 6th smallest of 7) of its
+    warm samples, `value` sums the medians, `value_iqr` is the IQR of
+    the warm pass totals, and both ratios pair Spark and DuckDB medians
+    over the oracle-backed queries (r1-r5 subset for `ratio_warm`)."""
+    from bench import median_iqr, summarize
+
+    assert median_iqr([7, 1, 6, 2, 5, 3, 4]) == (4, 4)
+    spark_runs = {
+        "pricing_summary": [9.0, 0.1, 0.7, 0.2, 0.6, 0.3, 0.5, 0.4],
+        "char_lm_quality_documents": [5.0] + [1.0] * 7,
+        # rows-only (no oracle); one slow warm run moves neither figure
+        "minhash_near_dup_documents": [2.0] + [0.2] * 6 + [3.0],
+    }
+    duck_runs = {
+        "pricing_summary": [0.9] + [0.1] * 7,
+        "char_lm_quality_documents": [0.8, 0.4, 0.6, 0.5, 0.5, 0.5, 0.4, 0.6],
+    }
+    s = summarize(spark_runs, duck_runs)
+    approx = pytest.approx
+    assert s["queries"] == approx(
+        {"pricing_summary": 0.4, "char_lm_quality_documents": 1.0, "minhash_near_dup_documents": 0.2}
+    )
+    assert s["queries_iqr"] == approx(
+        {"pricing_summary": 0.4, "char_lm_quality_documents": 0.0, "minhash_near_dup_documents": 0.0}
+    )
+    assert s["cold_queries"] == approx(
+        {"pricing_summary": 9.0, "char_lm_quality_documents": 5.0, "minhash_near_dup_documents": 2.0}
+    )
+    assert s["cold_total"] == approx(16.0)
+    assert s["value"] == approx(1.6)
+    # pass totals 1.3 1.9 1.4 1.8 1.5 1.7 4.4 -> Q1 1.4, Q3 1.9
+    assert s["value_iqr"] == approx(0.5)
+    assert s["duck_queries"] == approx({"pricing_summary": 0.1, "char_lm_quality_documents": 0.5})
+    assert s["duck_queries_iqr"] == approx({"pricing_summary": 0.0, "char_lm_quality_documents": 0.2})
+    assert (s["spark_oracle_subset_total"], s["duck_total"], s["ratio_warm"]) == approx((0.4, 0.1, 4.0))
+    assert (s["spark_full_total"], s["duck_full_total"], s["ratio_warm_full"]) == approx((1.4, 0.6, 2.33))
+    assert s["spark_runs"] is spark_runs and s["duck_runs"] is duck_runs
+
+
 def test_bench_stdout_line_fits_driver_capture():
     """The driver json-parses the LAST 2000 bytes of bench.py's
     output; r4-r6 all shipped `parsed: null` because the line carried
     per-query dicts and methodology prose past that window. Pin the
-    contract: a representative full-payload compact line (current
-    headline set, worst-case-width values) parses, keeps the driver's
-    required keys, and stays under the capture budget."""
+    contract on a payload built by bench's own summary from synthetic
+    samples (current headline set, worst-case-width values): the line
+    parses, carries exactly the scalar key set plus `queries`, and
+    stays under the capture budget."""
     import json
 
-    from bench import HEADLINE, _LINE_BUDGET, compact_line
+    from bench import _LINE_BUDGET, _LINE_KEYS, DETAIL, HEADLINE, RUNS, compact_line, summarize
 
+    spark_runs = {name: [123.4567] * RUNS for name in HEADLINE}
+    duck_runs = {name: [12.3456] * RUNS for name in HEADLINE if REGISTRY[name].oracle is not None}
     payload = {
         "metric": "headline_queries_total_runtime_warm",
-        "value": 123.456,
         "unit": "sec",
-        "queries": {name: 123.4567 for name in HEADLINE},
-        "cold_queries": {name: 123.4567 for name in HEADLINE},  # must be dropped
-        "duck_queries": {name: 123.4567 for name in HEADLINE},  # must be dropped
         "sf": 0.1,
-        "cold_total": 123.456,
-        "spark_oracle_subset_total": 123.456,
-        "duck_total": 123.456,
-        "ratio_warm": 12.34,
-        "spark_full_total": 123.456,
-        "duck_full_total": 123.456,
-        "ratio_warm_full": 12.34,
+        **summarize(spark_runs, duck_runs),
         "floor_sec": 0.1234,
         "loadavg_1m": [12.34, 12.34],
-        "load_signal": [12.34, 12.34],
-        "floor_probe": [0.1234, 0.1234],
-        "probe_mean": 0.1234,
-        "probe_frac_suspect": 0.123,
-        "mid_probes": [0.1234] * 42,  # must be dropped (42 floats)
-        "banked_candidates": 12,
-        "banked_live": False,
-        "banked_best_value": 123.456,
-        "banked_best_ratio": 12.34,
-        "cold_stormy": True,
-        "cold_from_attempt": 1,
-        "cold_loadavg_1m": [12.34, 12.34],
-        "attempts": 3,
-        "attempt_summaries": [{"x": 1}] * 3,  # must be dropped
-        "methodology": "x" * 1200,  # must be dropped
+        "session_start_sec": 123.456,
         "input_bytes": 17504410,
         "input_cached": True,
         "input_cache_build_sec": 12.345,
-        "input_cache_partitions": {name: 20 for name in HEADLINE},  # must be dropped
+        "input_cache_partitions": {name: 20 for name in HEADLINE},
         "tuned_confs": {"spark.sql.shuffle.partitions": "8", "spark.sql.adaptive.enabled": "false"},
-        "ratio_spread": {"min": 12.34, "median": 12.34, "max": 12.34, "n": 12},
-        "detail": "BENCH_result.json",
+        "detail": DETAIL,
+        "process_wall_sec": 1234.567,
     }
     line = compact_line(payload)
     assert len(line) <= _LINE_BUDGET, len(line)
     parsed = json.loads(line)
+    assert set(parsed) == set(_LINE_KEYS)
     for k in ("metric", "value", "unit", "queries", "sf", "ratio_warm", "ratio_warm_full"):
         assert k in parsed, k
-    for k in ("cold_queries", "duck_queries", "attempt_summaries", "methodology",
-              "input_cache_partitions", "mid_probes"):
-        assert k not in parsed, k
+    assert set(parsed["queries"]) == set(HEADLINE)
 
 
-def test_bench_candidate_selection_is_outcome_blind():
-    """Cross-invocation banking must pick the weather-cleanest
-    candidate — storm-free first, then lowest MID-SWEEP probe mean,
-    then lowest pre-attempt load, then lowest worst edge probe,
-    earliest on ties — and must NEVER read a ratio: the best-looking
-    number on a stormy window loses to a worse-looking number on a
-    clean one."""
-    from bench import candidate_weather_key
+def test_bench_cli_prints_result_line(sf_dir):
+    """`python bench.py` end to end on the test data: exit 0, a last
+    stdout line inside the harness's 2000-byte capture that parses with
+    the contract keys, and no banked-candidate or per-round files
+    written beside it."""
+    import glob
+    import json
+    import os
+    import subprocess
+    import sys
 
-    def cand(ts, load_pre, post_1m, probes, ratio, pmean=0.03, pfrac=0.0):
-        return {
-            "ts": ts,
-            "payload": {
-                "load_signal": [load_pre, 9.9],
-                "loadavg_1m": [load_pre, post_1m],
-                "floor_probe": probes,
-                "probe_mean": pmean,
-                "probe_frac_suspect": pfrac,
-                "ratio_warm_full": ratio,
-            },
-        }
+    from bench import HEADLINE
 
-    stormy_fast = cand(1.0, 0.3, 8.2, [0.03, 0.03], 1.2)   # storm: post-1m
-    probed_fast = cand(2.0, 0.3, 2.0, [0.03, 0.19], 1.3)   # storm: edge probe
-    midstorm_fast = cand(2.5, 0.2, 2.0, [0.03, 0.03], 1.1, pmean=0.08, pfrac=0.5)  # storm: mid-sweep
-    clean_slow = cand(3.0, 0.9, 3.1, [0.034, 0.04], 2.4, pmean=0.031)
-    cleaner_slow = cand(4.0, 0.5, 3.1, [0.05, 0.04], 2.6, pmean=0.028)
-    pool = [stormy_fast, probed_fast, midstorm_fast, clean_slow, cleaner_slow]
-    # lowest probe_mean wins among the storm-free, whatever the ratio
-    assert min(pool, key=candidate_weather_key) is cleaner_slow
-    # probe-mean ties break by pre-load, then earliest ts
-    a = cand(5.0, 0.5, 3.0, [0.03, 0.03], 9.9, pmean=0.025)
-    b = cand(6.0, 0.5, 3.0, [0.03, 0.03], 0.1, pmean=0.025)
-    assert min([b, a, cleaner_slow], key=candidate_weather_key) is a
-    # a mid-sweep-suspect candidate loses to a clean one even with a
-    # better mean on every other axis
-    assert min([midstorm_fast, clean_slow], key=candidate_weather_key) is clean_slow
-    # a candidate missing floor_probe (pre-r12 artifact) ranks stormy
-    legacy = cand(0.5, 0.1, 1.0, None, 0.5)
-    del legacy["payload"]["floor_probe"]
-    assert min([legacy, clean_slow], key=candidate_weather_key) is clean_slow
-    # a candidate missing probe_mean (early-r12 artifact) ranks after
-    # any candidate that has one
-    early = cand(0.7, 0.1, 1.0, [0.03, 0.03], 0.5)
-    del early["payload"]["probe_mean"]
-    assert min([early, clean_slow], key=candidate_weather_key) is clean_slow
-    # r13 (advice): a parseable-but-malformed banked line — payload
-    # missing load fields entirely, or no payload at all — must rank
-    # LAST instead of raising KeyError at emit time
-    malformed = {"ts": 0.1, "payload": {"ratio_warm_full": 0.5}}
-    assert min([malformed, clean_slow], key=candidate_weather_key) is clean_slow
-    no_payload = {"ts": 0.1}
-    assert min([no_payload, clean_slow], key=candidate_weather_key) is clean_slow
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def leftovers() -> dict[str, float]:
+        pats = ("BENCH_candidates.jsonl", "BENCH_result_r*.json")
+        return {p: os.path.getmtime(p) for pat in pats for p in glob.glob(os.path.join(root, pat))}
+
+    before = leftovers()
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_CPUS=str(len(os.sched_getaffinity(0))),
+        SPARK_DRIVER_MEMORY="2g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "bench.py"], cwd=root, env=env, capture_output=True, text=True, timeout=1200
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = proc.stdout.rstrip("\n").splitlines()[-1]
+    assert len(line.encode()) <= 2000, len(line.encode())
+    parsed = json.loads(line)
+    for k in ("metric", "value", "unit", "queries", "sf", "ratio_warm", "ratio_warm_full"):
+        assert k in parsed, k
+    assert set(parsed["queries"]) == set(HEADLINE)
+    assert parsed["value"] > 0 and parsed["value_iqr"] >= 0
+    assert leftovers() == before
 
 
 def test_char_lm_rebuild_never_reuses_previous_cache(spark, sf_dir):

@@ -89,7 +89,7 @@ def main() -> None:
     new_rows = sorted(map(tuple, new_df.collect()))
     assert old_rows == new_rows, (
         f"row mismatch: old={len(old_rows)} new={len(new_rows)}; "
-        f"first diff: {next((a, b) for a, b in zip(old_rows, new_rows) if a != b)}"
+        f"first diff: {next(((a, b) for a, b in zip(old_rows, new_rows) if a != b), None)}"
     )
     print(f"EQUAL: {len(new_rows)} rows identical at {SF_DIR}")
 

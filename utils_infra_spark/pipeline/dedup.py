@@ -876,25 +876,12 @@ def paragraph_dedup_corpus(df: DataFrame, text_col: str, id_col: str) -> DataFra
     )
 
 
-def _md5_hex16(col_sql: str, j: int) -> str:
-    """SQL for the j-th 16-bit slice of md5(col) (hex chars 4j+1..4j+4),
-    decoded engine-neutrally via ``instr('0123456789abcdef', c) - 1``
-    — the same portable-nibble idiom as :func:`simhash16_md5`.
-
-    NOTE: inlines ``md5(col)`` into every nibble (4 evaluations per
-    slice — Spark's codegen does not CSE across these shapes). Hot
-    paths should hash once into an aliased attribute and use
-    :func:`_hex16` on the digest column instead (r14 bloom fix: 16
-    md5/row → 1)."""
-    a = 4 * j + 1
-    nib = lambda i: f"(instr('0123456789abcdef', substr(md5({col_sql}), {i}, 1)) - 1)"
-    return f"({nib(a)} * 4096 + {nib(a + 1)} * 256 + {nib(a + 2)} * 16 + {nib(a + 3)})"
-
-
 def _hex16(hex_col_sql: str, j: int) -> str:
     """SQL for the j-th 16-bit slice of an ALREADY-COMPUTED md5 hex
-    string column (chars 4j+1..4j+4) — the nibble decode of
-    :func:`_md5_hex16` minus the per-nibble re-hash."""
+    string column (hex chars 4j+1..4j+4), decoded engine-neutrally via
+    ``instr('0123456789abcdef', c) - 1`` — the same portable-nibble
+    idiom as :func:`simhash16_md5`. Callers hash once into an aliased
+    digest column and slice it here, so each row pays one md5."""
     a = 4 * j + 1
     nib = lambda i: f"(instr('0123456789abcdef', substr({hex_col_sql}, {i}, 1)) - 1)"
     return f"({nib(a)} * 4096 + {nib(a + 1)} * 256 + {nib(a + 2)} * 16 + {nib(a + 3)})"
@@ -922,11 +909,11 @@ def bloom_novelty(
     The filter is m = 2^16 bits as 2048 32-bit words (32, not 64:
     DuckDB overflow-checks ``1 << 63`` on signed BIGINTs, so the
     cross-engine-safe word width caps the shift at 31), k 16-bit
-    positions per document taken directly from md5(text) hex slices
-    (:func:`_md5_hex16` — engine-neutral, so the whole construction is
-    oracle-checkable bit-for-bit). Build: explode corpus positions →
-    groupBy word index (BOUNDED key space, 2048 rows max) → ``bit_or``
-    of the position bits, map-side combined.
+    positions per document taken directly from slices of one md5(text)
+    hex digest (:func:`_hex16` — engine-neutral, so the whole
+    construction is oracle-checkable bit-for-bit). Build: explode
+    corpus positions → groupBy word index (BOUNDED key space, 2048
+    rows max) → ``bit_or`` of the position bits, map-side combined.
 
     Two probe forms, verdict-identical (pinned by test):
 
