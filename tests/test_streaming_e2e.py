@@ -1,13 +1,16 @@
 """End-to-end Structured Streaming tests (T1-T4): a real file-source
-stream driven through applyInPandasWithState, checked for parity with
-the batch replay — SURVEY §7 hard part #1's correctness contract —
-plus a watermarked tumbling-window aggregation (W3 streaming form).
+stream driven through both keyed-upsert operators (the streaming
+aggregation without a TTL, applyInPandasWithState with one), checked
+for parity with the batch replay — SURVEY §7 hard part #1's
+correctness contract — plus a watermarked tumbling-window aggregation
+(W3 streaming form).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 
@@ -19,6 +22,7 @@ from utils_infra_spark.streaming.upsert import keyed_upsert_batch, keyed_upsert_
 
 SCHEMA = "mmsi int, ts timestamp, lat double, lon double, name string, ship_type double"
 VALUE_COLS = ["lat", "lon", "name", "ship_type"]
+UPSERT_STATE = "ts timestamp, lat double, lon double, name string, ship_type double"
 
 BATCH1 = [
     {"mmsi": 1, "ts": "2024-01-01T10:00:00Z", "lat": -41.0, "lon": 174.0, "name": None, "ship_type": None},
@@ -35,17 +39,22 @@ BATCH2 = [
 ]
 
 
-def write_batches(dirpath: str) -> None:
+def write_files(dirpath: str, files: list[list[dict]]) -> None:
+    """One JSON-line file per entry, with increasing modification
+    times: the file source plans files oldest-first, so with
+    maxFilesPerTrigger=1 each file is its own micro-batch, in order."""
     os.makedirs(dirpath, exist_ok=True)
-    for i, batch in enumerate([BATCH1, BATCH2]):
-        with open(os.path.join(dirpath, f"batch{i}.json"), "w") as f:
-            for rec in batch:
-                f.write(json.dumps(rec) + "\n")
+    t0 = time.time() - len(files)
+    for i, recs in enumerate(files):
+        path = os.path.join(dirpath, f"part{i}.json")
+        with open(path, "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in recs)
+        os.utime(path, (t0 + i, t0 + i))
 
 
 def test_stream_upsert_matches_batch_replay(spark, tmp_path):
     src = str(tmp_path / "stream_src")
-    write_batches(src)
+    write_files(src, [BATCH1, BATCH2])
 
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(src)
@@ -95,7 +104,7 @@ def test_stream_windowed_counts_with_watermark(spark, tmp_path):
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "win_src")
-    write_batches(src)
+    write_files(src, [BATCH1, BATCH2])
     stream = spark.readStream.schema(SCHEMA).json(src)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -171,7 +180,7 @@ def test_stream_upsert_with_ttl_smoke(spark, tmp_path):
     (deterministic expiry testing needs wall-clock control; this
     asserts the GroupStateTimeout configuration executes)."""
     src = str(tmp_path / "ttl_src")
-    write_batches(src)
+    write_files(src, [BATCH1, BATCH2])
     stream = spark.readStream.schema(SCHEMA).json(src)
     upserts = keyed_upsert_stream(
         stream, "mmsi", "ts", VALUE_COLS,
@@ -245,7 +254,7 @@ def test_stream_session_windows_with_watermark(spark, tmp_path):
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "sess_src")
-    write_batches(src)
+    write_files(src, [BATCH1, BATCH2])
     stream = spark.readStream.schema(SCHEMA).json(src)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -377,11 +386,12 @@ def test_stream_cms_foreachbatch_merge_equals_batch(spark, tmp_path):
 def test_stream_upsert_accepts_structtype_state_schema(spark, tmp_path):
     """The StructType state_schema path must get the same appended
     __ts_/__tb_ guard fields as the DDL-string path — a schema without
-    them mis-sizes state.update and mis-zips on restore."""
+    them mis-sizes state.update and mis-zips on restore. Only the TTL
+    form keeps that state, so the test sets a TTL."""
     from pyspark.sql.types import StructType
 
     src = str(tmp_path / "stream_src_st")
-    write_batches(src)
+    write_files(src, [BATCH1, BATCH2])
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(src)
     upserts = keyed_upsert_stream(
         stream,
@@ -392,6 +402,7 @@ def test_stream_upsert_accepts_structtype_state_schema(spark, tmp_path):
         state_schema=StructType.fromDDL(
             "ts timestamp, lat double, lon double, name string, ship_type double"
         ),
+        ttl_ms=24 * 3600 * 1000,
     )
     q = (
         upserts.writeStream.format("memory")
@@ -401,7 +412,7 @@ def test_stream_upsert_accepts_structtype_state_schema(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await(q)
+    _drain_and_stop(q)  # TTL query never self-terminates (see helper)
     updates = spark.sql("SELECT * FROM upsert_states_structtype").toPandas()
     final = updates.sort_values("ts", kind="stable").drop_duplicates("mmsi", keep="last").set_index("mmsi")
     batch_df = spark.read.schema(SCHEMA).json(src)
@@ -412,6 +423,118 @@ def test_stream_upsert_accepts_structtype_state_schema(spark, tmp_path):
             assert (final.loc[key, c] == want.loc[key, c]) or (
                 final.loc[key, c] != final.loc[key, c] and want.loc[key, c] != want.loc[key, c]
             ), (key, c)
+
+
+def run_upsert(spark, src, ckpt, schema=SCHEMA, **kw):
+    """Run keyed_upsert_stream over ``src`` one file per micro-batch.
+    Returns (final state per key: the key's last emitted row by batch
+    id, the state operator names from the query progress)."""
+    emitted: list = []
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
+    upserts = keyed_upsert_stream(
+        stream, "mmsi", "ts", VALUE_COLS, output_schema=SCHEMA, state_schema=UPSERT_STATE, **kw
+    )
+    q = (
+        upserts.writeStream.foreachBatch(lambda b, bid: emitted.extend((bid, r.asDict()) for r in b.collect()))
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if kw.get("ttl_ms") is None:
+        _await(q)
+    else:
+        _drain_and_stop(q)  # TTL query never self-terminates (see helper)
+    final = {row["mmsi"]: row for _bid, row in sorted(emitted, key=lambda e: e[0])}
+    ops = {op["operatorName"] for p in q.recentProgress for op in p["stateOperators"]}
+    return final, ops
+
+
+def batch_replay(spark, src, schema=SCHEMA, tiebreak=None):
+    df = spark.read.schema(schema).json(src)
+    return {r.mmsi: r.asDict() for r in keyed_upsert_batch(df, "mmsi", "ts", VALUE_COLS, tiebreak=tiebreak).collect()}
+
+
+def _rec(mmsi, ts, lat=None, lon=None, name=None, ship_type=None, **extra):
+    return {"mmsi": mmsi, "ts": f"2024-01-01T{ts}Z", "lat": lat, "lon": lon,
+            "name": name, "ship_type": ship_type, **extra}
+
+
+@pytest.fixture(scope="module")
+def parity_runs(spark, tmp_path_factory):
+    """One feed with out-of-order event times inside a file, per-field
+    nulls, and late events older than the stored state arriving in
+    later files, run through the no-TTL aggregation and the TTL
+    applyInPandasWithState form (TTL far past the test). Returns
+    {form: (final state, operator names)} plus the batch replay."""
+    tmp = tmp_path_factory.mktemp("upsert_parity")
+    src = str(tmp / "src")
+    write_files(src, [
+        [
+            _rec(1, "10:05:00", name="ALPHA", ship_type=70.0),
+            _rec(1, "10:00:00", lat=-41.0, lon=174.0),  # older, same file
+            _rec(2, "09:00:00", name="BRAVO"),
+        ],
+        [
+            # older than key 1's stored name, newer than its position
+            _rec(1, "10:02:00", lat=-41.1, lon=174.1),
+            _rec(2, "11:00:00", lat=-36.8, lon=174.7, ship_type=80.0),
+            _rec(2, "10:30:00", name="BRAVO II", ship_type=60.0),
+        ],
+        [
+            # older than every stored field of key 1: changes nothing
+            _rec(1, "09:30:00", lat=-40.0, lon=173.0, name="STALE", ship_type=30.0),
+            _rec(3, "08:00:00", lat=-43.5, lon=172.6, name="CHARLIE"),
+        ],
+    ])
+    return {
+        "agg": run_upsert(spark, src, str(tmp / "ckpt_agg")),
+        "ttl": run_upsert(spark, src, str(tmp / "ckpt_ttl"), ttl_ms=24 * 3600 * 1000),
+        "batch": batch_replay(spark, src),
+    }
+
+
+def test_stream_upsert_both_forms_match_batch_replay(parity_runs):
+    agg, ttl = parity_runs["agg"][0], parity_runs["ttl"][0]
+    assert agg == ttl == parity_runs["batch"]
+    assert (agg[1]["lat"], agg[1]["name"], agg[1]["ship_type"]) == (-41.1, "ALPHA", 70.0)
+    assert (agg[2]["lat"], agg[2]["name"], agg[2]["ship_type"]) == (-36.8, "BRAVO II", 80.0)
+
+
+def test_stream_upsert_state_operator_per_form(parity_runs):
+    """Without a TTL the upsert is a JVM streaming aggregation (its
+    state operator is the aggregation's StateStoreSave); with one it
+    stays on applyInPandasWithState."""
+    assert parity_runs["agg"][1] == {"stateStoreSave"}
+    assert parity_runs["ttl"][1] == {"applyInPandasWithState"}
+
+
+def test_stream_upsert_tiebreak_both_forms(spark, tmp_path):
+    """Equal event times split across files, the tiebreak winner
+    arriving FIRST: both stream forms must keep the higher
+    (ts, seq) value — not the later-processed one, and not the
+    greatest value — exactly as the batch replay with the same
+    tiebreak."""
+    schema = SCHEMA + ", seq bigint"
+    src = str(tmp_path / "tb_src")
+    write_files(src, [
+        [
+            _rec(7, "10:00:00", lat=-41.0, lon=174.0, name="NEW", seq=2),
+            _rec(8, "10:00:00", lat=-30.0, name="ZED", seq=1),
+        ],
+        [
+            _rec(7, "10:00:00", lat=-40.0, lon=175.0, name="OLD", ship_type=70.0, seq=1),
+            _rec(8, "10:00:00", lat=-35.0, name="ABLE", seq=5),
+        ],
+    ])
+    want = batch_replay(spark, src, schema, tiebreak="seq")
+    agg, _ = run_upsert(spark, src, str(tmp_path / "ckpt_tb_agg"), schema, tiebreak="seq")
+    ttl, _ = run_upsert(
+        spark, src, str(tmp_path / "ckpt_tb_ttl"), schema, tiebreak="seq", ttl_ms=24 * 3600 * 1000
+    )
+    assert agg == ttl == want
+    assert (agg[7]["lat"], agg[7]["lon"], agg[7]["name"], agg[7]["ship_type"]) == (-41.0, 174.0, "NEW", 70.0)
+    assert (agg[8]["lat"], agg[8]["name"]) == (-35.0, "ABLE")
 
 
 def test_stream_near_dup_suppression(spark, tmp_path):
@@ -537,12 +660,13 @@ def test_tws_upsert_plan_builds_and_analyzes(spark, tmp_path):
     and this container ships no protobuf — a live query fails fast
     with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE (measured).
     The merge semantics are covered by the direct processor test
-    below plus the shared merge_group fuzz tests; the
-    applyInPandasWithState form carries the e2e parity proof."""
+    below plus the shared merge_group fuzz tests; keyed_upsert_stream's
+    TTL form (applyInPandasWithState over the same merge_group)
+    carries the e2e parity proof."""
     from utils_infra_spark.streaming.upsert import keyed_upsert_stream_tws
 
     src_dir = str(tmp_path / "tws_src")
-    write_batches(src_dir)
+    write_files(src_dir, [BATCH1, BATCH2])
     stream = spark.readStream.schema(SCHEMA).json(src_dir)
     upserts = keyed_upsert_stream_tws(
         stream,

@@ -565,8 +565,8 @@ def test_two_concurrent_feeds_do_not_interfere(spark, tmp_path):
 
 def test_websocket_full_pipeline_matches_batch_replay(spark, tmp_path):
     """The reference's whole AIS path, live: WebSocket frames ->
-    normalize_any -> keyed upsert state (applyInPandasWithState),
-    across a reconnect — and the streaming state must equal the batch
+    normalize_any -> keyed upsert state (the no-TTL streaming
+    aggregation), across a reconnect — and the streaming state must equal the batch
     window replay of the same payloads (the T1-T3 correctness
     contract, now fed by the real socket source)."""
     from utils_infra_spark.sources.normalize import normalize_any

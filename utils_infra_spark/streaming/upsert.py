@@ -9,12 +9,24 @@ a TTL.
 Engine shape:
 - **batch replay** (``keyed_upsert_batch``): last non-null value per
   field ordered by event time — one window pass, DuckDB-checkable.
-- **streaming** (``keyed_upsert_stream``): the same merge as an
-  ``applyInPandasWithState`` stateful operator with a processing-time
-  TTL. The CORRECTNESS CONTRACT is batch/stream parity: replaying any
+- **streaming** (``keyed_upsert_stream``), two operators chosen by
+  ``ttl_ms``:
+
+  - without a TTL, a plain streaming aggregation: per field,
+    ``max(struct(ts[, tiebreak], value))`` over non-null values, kept
+    in the state store by StateStoreRestore/StateStoreSave. ``max`` is
+    associative and commutative, so newest-non-null-wins holds for
+    any micro-batch split and arrival order, and no Python worker
+    runs;
+  - with a TTL, ``applyInPandasWithState`` folding rows through
+    :func:`merge_group` with a processing-time timeout — Spark's
+    built-in aggregations have no processing-time eviction.
+
+  The CORRECTNESS CONTRACT is batch/stream parity: replaying any
   prefix of the stream through the batch form must equal the
-  streaming state (tested in tests/test_streaming.py) — this is how a
-  non-SQL-expressible op gets verified (SURVEY §7 hard part #1).
+  streaming state (tested in tests/test_streaming.py and
+  tests/test_streaming_e2e.py) — this is how a non-SQL-expressible op
+  gets verified (SURVEY §7 hard part #1).
 """
 
 from __future__ import annotations
@@ -112,35 +124,47 @@ def keyed_upsert_stream(
     tiebreak: str | None = None,
     tiebreak_type: str = "bigint",
 ):
-    """Streaming keyed upsert via applyInPandasWithState.
+    """Streaming keyed upsert: one state row per key, per-field
+    newest-non-null merge. Use on a streaming DataFrame in ``update``
+    output mode; returns the updated-state stream (``output_schema``:
+    key, ts and the value columns).
 
-    One state row per key; per-field newest-non-null merge; optional
-    processing-time TTL (T2 — the reference's 6 h vessel retention).
-    Use on a streaming DataFrame; returns the updated-state stream.
+    The operator depends on ``ttl_ms``:
 
-    ``state_schema`` lists ts + value columns; the per-field
-    event-time guard columns (``__ts_<col> timestamp``, plus
-    ``__tb_<col>`` when ``tiebreak`` is set) are appended
-    automatically. Pass the same ``tiebreak`` to
-    ``keyed_upsert_batch`` for parity on tied event times.
+    - ``ttl_ms=None``: a streaming aggregation (StateStoreSave in the
+      query progress), no Python stage. Per field the winner is the
+      greatest ``(ts[, tiebreak], value)`` among non-null values, so
+      value columns must be orderable types (not maps).
+      ``state_schema`` is unused.
+    - ``ttl_ms`` set: ``applyInPandasWithState`` with a
+      processing-time timeout (T2 — the reference's 6 h vessel
+      retention). ``state_schema`` lists ts + value columns; the
+      per-field event-time guard columns (``__ts_<col> timestamp``,
+      plus ``__tb_<col>`` when ``tiebreak`` is set) are appended
+      automatically.
+
+    Ties: pass the same ``tiebreak`` to ``keyed_upsert_batch`` and
+    both forms resolve equal event times the same way. Without it,
+    equal event times resolve to the greatest value on the no-TTL
+    form and to the later-processed row on the TTL form — the batch
+    window's order among ties is engine-arbitrary either way.
+
+    The two forms keep different state, so a checkpoint from one
+    cannot be restored by the other — nor one written by the earlier
+    no-TTL ``applyInPandasWithState`` operator.
     """
-    guard_ddl = ", ".join(f"__ts_{c} timestamp" for c in value_cols)
-    if tiebreak is not None:
-        guard_ddl += ", " + ", ".join(f"__tb_{c} {tiebreak_type}" for c in value_cols)
-    if isinstance(state_schema, str):
-        state_schema = state_schema + ", " + guard_ddl
-    else:
-        # StructType path gets the same appended guard fields — the
-        # state tuple below always carries them, so a caller-provided
-        # StructType without them would mis-zip on restore
-        state_schema = StructType(list(state_schema.fields) + list(StructType.fromDDL(guard_ddl).fields))
+    if ttl_ms is None:
+        order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+        newest = [
+            F.max(F.when(F.col(c).isNotNull(), F.struct(*order, F.col(c).alias("__v"))))["__v"].alias(c)
+            for c in value_cols
+        ]
+        agg = df.groupBy(key).agg(F.max(ts).alias(ts), *newest)
+        if isinstance(output_schema, str):
+            output_schema = StructType.fromDDL(output_schema)
+        return agg.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in output_schema.fields])
 
-    # state layout: ts, then value columns, then one per-field
-    # event-time per value column (the newest-wins guard), then the
-    # per-field tiebreak values when tie determinism is requested
-    state_fields = [ts] + value_cols + [f"__ts_{c}" for c in value_cols]
-    if tiebreak is not None:
-        state_fields += [f"__tb_{c}" for c in value_cols]
+    state_schema, state_fields = _tws_state_layout(state_schema, ts, value_cols, tiebreak, tiebreak_type)
 
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.hasTimedOut:
@@ -153,17 +177,16 @@ def keyed_upsert_stream(
                 merged = merge_group(pdf, merged, ts, value_cols, tiebreak)
         if merged is not None:
             state.update(tuple(merged.get(f) for f in state_fields))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
+            state.setTimeoutDuration(ttl_ms)
             out = {k_col: [k_val] for k_col, k_val in zip([key], key_tuple)}
             out[ts] = [merged.get(ts)]
             for c in value_cols:
                 out[c] = [merged.get(c)]
             yield pd.DataFrame(out)
 
-    timeout = GroupStateTimeout.ProcessingTimeTimeout if ttl_ms is not None else GroupStateTimeout.NoTimeout
     return df.groupBy(key).applyInPandasWithState(
-        fn, outputStructType=output_schema, stateStructType=state_schema, outputMode="update", timeoutConf=timeout
+        fn, outputStructType=output_schema, stateStructType=state_schema, outputMode="update",
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
@@ -308,7 +331,8 @@ def keyed_upsert_stream_tws(
     """The keyed upsert on Spark 4's ``transformWithStateInPandas`` —
     the modern arbitrary-state API (typed state variables, native
     per-state TTL, timers, RocksDB-backed) and the forward path for
-    :func:`keyed_upsert_stream`'s ``applyInPandasWithState`` form.
+    :func:`keyed_upsert_stream`'s TTL (``applyInPandasWithState``)
+    form.
 
     Identical merge semantics: the processor folds rows through the
     SAME :func:`merge_group` over the SAME state layout
