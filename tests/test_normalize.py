@@ -3,9 +3,18 @@ convertJsonaisToAIS analog, ref ais-proxy/server.js:997-1215)."""
 
 from __future__ import annotations
 
+import importlib.util
+import os
+from collections import Counter
+from functools import reduce
+
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from utils_infra_spark.sources.normalize import (
+    _DIRECT_SCHEMA,
+    _is_array_payload,
     normalize_any,
     normalize_aprs,
     normalize_array,
@@ -26,15 +35,63 @@ BARE_ARRAY = '[{"mmsi": 512000008, "lat": -40.5, "lon": 173.2, "speed": 7.5, "co
 INVALID_COORDS = '{"mmsi": 512000006, "lat": 95.0, "lon": 174.0, "ts": "2024-01-15T08:30:50Z"}'
 GARBAGE = "this is not json at all {{{"
 UNKNOWN_SHAPE = '{"vessel": "no recognizable fields", "x": 1}'
+FIXTURES = [
+    CATCHER, MINIMAL, GROUPS, DIRECT, APRS, APRS_ALPHA_CALL,
+    BARE_ARRAY, INVALID_COORDS, GARBAGE, UNKNOWN_SHAPE,
+]
+# degenerate and ambiguous payloads: null containers and elements,
+# two formats' fields in one object, and JSON that is not an object
+EDGE = [
+    '{"msgs": null}',
+    '{"msgs": [null, {"mmsi": 512000010, "lat": -41.0, "lon": 174.0, "rxtime": "20240115083000"}]}',
+    '{"groups": [null, {"msgs": null}, {"msgs": [null, {"userid": 512000011, "latitude": -45.0, "longitude": 170.0}]}]}',
+    '{"groups": [{"msgs": null}]}',
+    '{"mmsi": 512000012, "lat": -41.0, "lon": 174.0, "event_ts": "2024-01-15T08:30:00Z", "ts": "2024-01-15T08:31:00Z"}',
+    '{"mmsi": 512000013, "lat": -41.0, "lon": 174.0, "ts": "2024-01-15T08:30:00Z", "event_ts": null}',
+    '{"call": "512000014", "mmsi": 512000099, "lat": -39.0, "lng": 176.0, "time": "2024-01-15T08:31:00Z"}',
+    '[{"mmsi": 512000015, "lat": -40.0, "lon": 173.0}, null, {"mmsi": 512000017, "lat": -40.0}, {"mmsi": null, "lat": -40.0, "lon": 173.0}, {"mmsi": 512000016, "lat": 95.0, "lon": 173.0}]',
+    "[]",
+    "[null]",
+    "",
+    "null",
+    "42",
+    '"a string"',
+]
+
+
+def frame(spark, payloads):
+    return spark.createDataFrame([(p,) for p in payloads], "raw string")
 
 
 @pytest.fixture(scope="module")
 def raw(spark):
-    payloads = [
-        CATCHER, MINIMAL, GROUPS, DIRECT, APRS, APRS_ALPHA_CALL,
-        BARE_ARRAY, INVALID_COORDS, GARBAGE, UNKNOWN_SHAPE,
+    return frame(spark, FIXTURES)
+
+
+def union_reference(df: DataFrame, raw_col: str = "raw") -> DataFrame:
+    """The six-branch union ``normalize_any`` replaced, rebuilt from the
+    per-format functions: object formats see object payloads only,
+    minimal only what direct's event_ts leaves, then the validity
+    filter. Each branch scans the input again."""
+    raw = F.col(raw_col)
+    obj = df.where(~_is_array_payload(raw))
+    no_event_ts = F.from_json(raw, _DIRECT_SCHEMA, {"mode": "PERMISSIVE"})["event_ts"].isNull()
+    branches = [
+        normalize_catcher(obj, raw_col),
+        normalize_groups(obj, raw_col),
+        normalize_direct(obj, raw_col),
+        normalize_minimal(obj.where(no_event_ts), raw_col),
+        normalize_aprs(obj, raw_col),
+        normalize_array(df, raw_col),
     ]
-    return spark.createDataFrame([(p,) for p in payloads], "raw string")
+    out = reduce(DataFrame.unionByName, branches)
+    return out.where(
+        F.col("mmsi").isNotNull() & F.col("lat").between(-90, 90) & F.col("lon").between(-180, 180)
+    )
+
+
+def _rows(df: DataFrame) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
 
 
 def test_catcher_branch(raw):
@@ -107,7 +164,62 @@ def test_unmatched_dead_letter(raw):
 def test_canonical_schema(raw):
     from utils_infra_spark.sources.normalize import CANONICAL_FIELDS
 
-    assert tuple(normalize_any(raw).columns) == CANONICAL_FIELDS
+    out = normalize_any(raw)
+    assert tuple(out.columns) == CANONICAL_FIELDS
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == [
+        ("mmsi", "bigint", True),
+        ("lat", "double", True),
+        ("lon", "double", True),
+        ("speed", "double", True),
+        ("course", "double", True),
+        ("name", "string", True),
+        ("event_ts", "timestamp", True),
+        ("source_format", "string", False),
+    ]
+
+
+def test_normalize_any_matches_union_on_fixtures_and_edges(spark):
+    df = frame(spark, FIXTURES + EDGE)
+    got, want = _rows(normalize_any(df)), _rows(union_reference(df))
+    assert got == want
+    # the edge payloads add rows from every container shape
+    assert {r[0] for r in got} >= {512000010, 512000011, 512000012, 512000013, 512000014, 512000015}
+
+
+def test_normalize_any_matches_union_on_seeded_feed(spark, tmp_path):
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_inputs", os.path.join(os.path.dirname(__file__), "..", "perfbench", "inputs.py")
+    )
+    inputs = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(inputs)
+    counts = inputs.write_feed(str(tmp_path), 3, files=4, lines_per_file=100)
+    df = spark.read.text(str(tmp_path)).withColumnRenamed("value", "raw")
+    got, want = _rows(normalize_any(df)), _rows(union_reference(df))
+    assert got == want
+    assert sum(got.values()) > counts["lines"]  # multi-message lines landed whole
+    assert {r[-1] for r in got} == {"catcher", "minimal", "groups", "direct", "aprs", "array"}
+
+
+def test_normalize_any_plan_is_one_scan(raw):
+    plan = normalize_any(raw)._jdf.queryExecution().optimizedPlan()
+    assert plan.collectLeaves().size() == 1
+    assert "Union" not in plan.toString()
+
+
+def test_each_payload_in_exactly_one_output(spark):
+    """Every payload yields at least one canonical row or exactly one
+    dead-letter row — never both, never neither."""
+    payloads = FIXTURES + EDGE
+    df = frame(spark, payloads)
+    dead = Counter(r.corrupt_record for r in unmatched_records(df).collect())
+    per_payload = reduce(
+        DataFrame.unionByName,
+        [normalize_any(df.where(F.col("raw") == p)).select(F.lit(i).alias("i")) for i, p in enumerate(payloads)],
+    )
+    rows = Counter(r.i for r in per_payload.collect())
+    assert set(dead) <= set(payloads)
+    for i, p in enumerate(payloads):
+        assert (rows[i] >= 1, dead[p]) in ((True, 0), (False, 1)), (p, rows[i], dead[p])
 
 
 def test_array_payload_with_leading_whitespace_routed(spark):

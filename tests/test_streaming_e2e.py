@@ -3,7 +3,7 @@ stream driven through both keyed-upsert operators (the streaming
 aggregation without a TTL, applyInPandasWithState with one), checked
 for parity with the batch replay — SURVEY §7 hard part #1's
 correctness contract — plus a watermarked tumbling-window aggregation
-(W3 streaming form).
+(W3 streaming form) and ``normalize_any`` reading a stream once.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ BATCH2 = [
 ]
 
 
-def write_files(dirpath: str, files: list[list[dict]]) -> None:
+def write_files(dirpath: str, files: list[list[dict | list]]) -> None:
     """One JSON-line file per entry, with increasing modification
     times: the file source plans files oldest-first, so with
     maxFilesPerTrigger=1 each file is its own micro-batch, in order."""
@@ -128,6 +128,41 @@ def test_stream_windowed_counts_with_watermark(spark, tmp_path):
         "2024-01-01 10:00:00": 4,  # 10:00, 10:02 (late), 10:05, 10:06
         "2024-01-01 11:00:00": 1,
     }
+
+
+def test_stream_normalize_any_scans_each_line_once(spark, tmp_path):
+    """normalize_any over a file-source stream reads each feed line
+    once: every trigger's numInputRows is its file's line count, with
+    all six wire formats in the same file."""
+    from utils_infra_spark.sources.normalize import normalize_any
+
+    ts = "2024-01-15T08:30:00Z"
+    lines = [
+        {"msgs": [{"mmsi": 512000001, "lat": -41.2, "lon": 174.8, "rxtime": "20240115083000"},
+                  {"mmsi": 512000002, "lat": -36.8, "lon": 174.7, "rxtime": "20240115083010"}]},
+        {"mmsi": 512000003, "lat": -43.5, "lon": 172.6, "ts": ts},
+        {"groups": [{"msgs": [{"userid": 512000004, "latitude": -45.9, "longitude": 170.5, "time_utc": ts}]}]},
+        {"mmsi": 512000005, "lat": -41.0, "lon": 174.0, "name": "DIRECT ONE", "event_ts": ts},
+        {"call": "512000007", "lat": -39.1, "lng": 176.9, "time": ts},
+        [{"mmsi": 512000008, "lat": -40.5, "lon": 173.2, "event_ts": ts}],
+        {"vessel": "no recognizable fields"},
+    ]
+    files = [lines, lines[2:], lines[:3]]
+    src = str(tmp_path / "norm_src")
+    write_files(src, files)
+    stream = spark.readStream.option("maxFilesPerTrigger", 1).text(src)
+    q = (
+        normalize_any(stream.withColumnRenamed("value", "raw"))
+        .writeStream.format("memory")
+        .queryName("normalized_feed")
+        .option("checkpointLocation", str(tmp_path / "norm_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await(q)
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [len(f) for f in files]
+    # 7 + 4 + 4 canonical rows: the unknown shape yields none
+    assert spark.sql("SELECT * FROM normalized_feed").count() == 15
 
 
 def test_checkpoint_restart_resumes_state(spark, tmp_path):

@@ -80,12 +80,6 @@ def floor_bucket(col: Column | str, seconds: int, offset_buckets: int = 0) -> Co
     return F.to_timestamp(bucketed)
 
 
-def hours_ago(col: Column | str, now: Column) -> Column:
-    """Hours since event, rounded to 0.1 (ref ais-proxy/server.js:1283)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.round((F.unix_timestamp(now) - F.unix_timestamp(col)) / 3600.0, 1)
-
-
 def relative_age(col: Column | str, now: Column) -> Column:
     """'Xm ago'/'Xh ago'/'Xd ago' render (ref display-proxy/index.html:1095-1107)."""
     col = F.col(col) if isinstance(col, str) else col

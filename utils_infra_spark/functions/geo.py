@@ -64,16 +64,6 @@ def quadkey(x: Column, y: Column, z: int) -> Column:
     return F.concat(*parts) if parts else F.lit("")
 
 
-def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Great-circle distance in km — used for buffered locality match
-    (ref generate-tlc-localities.js:29-35 uses degree euclidean; we
-    expose both)."""
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = F.sin(dlat / 2) ** 2 + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
-    return F.lit(6371.0) * 2 * F.asin(F.sqrt(a))
-
-
 def degree_distance(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
     """Euclidean distance in degrees (ref generate-tlc-localities.js:29-35)."""
     return F.sqrt(F.pow(lat1 - lat2, 2) + F.pow(lon1 - lon2, 2))

@@ -62,13 +62,6 @@ def dsum_sql(expr: str, alias: str, scale: int = 6) -> str:
     return f"CAST(SUM(CAST(FLOOR(({expr}) * {m!r}D + 0.5D) AS {_ACC})) AS DOUBLE) / {m!r}D AS {alias}"
 
 
-def davg_sql(expr: str, alias: str, scale: int = 6, qscale: int = 6) -> str:
-    """SQL-text twin of :func:`davg` (see :func:`dsum_sql`)."""
-    m = float(10**qscale)
-    total = f"CAST(SUM(CAST(FLOOR(({expr}) * {m!r}D + 0.5D) AS {_ACC})) AS DOUBLE) / {m!r}D"
-    return f"CAST(ROUND({total} / COUNT({expr}), {scale}) AS DOUBLE) AS {alias}"
-
-
 def davg(col: str | Column, alias: str, scale: int = 6, qscale: int = 6) -> Column:
     """Order-independent average: fixed-point sum / count, rounded.
 
@@ -78,11 +71,6 @@ def davg(col: str | Column, alias: str, scale: int = 6, qscale: int = 6) -> Colu
     col = F.col(col) if isinstance(col, str) else col
     total = F.sum(_quantize(col, qscale).cast(_ACC)).cast("double") / F.lit(float(10**qscale))
     return F.round(total / F.count(col), scale).cast("double").alias(alias)
-
-
-def grouped_sum(df: DataFrame, keys: list[str], value: str, *, sum_alias: str = "total", count_alias: str = "n") -> DataFrame:
-    """A1 (ref power-outages/server.js:92-125): SUM + COUNT per key."""
-    return df.groupBy(*keys).agg(dsum(value, sum_alias), F.count(F.lit(1)).alias(count_alias))
 
 
 def ratio_pct(numer: Column | str, denom: Column | str, alias: str, dp: int = 4) -> Column:

@@ -2,7 +2,8 @@
 
 W1 (keep-latest-per-key) lives in joins.latest_wins since the
 reference uses it as a merge primitive. These are the ranking and
-time-window forms.
+per-field latest forms; W3's time windows are ``F.window`` in the
+queries and streaming code.
 """
 
 from __future__ import annotations
@@ -31,13 +32,6 @@ def top_n_per_group(df: DataFrame, partition: list[str], order: list, n: int, *,
     return df.withColumn(rank_alias, F.row_number().over(w)).where(F.col(rank_alias) <= n)
 
 
-def keep_latest(df: DataFrame, key: str | list[str], ts: str, *tie_break: str) -> DataFrame:
-    """W1 — re-export of the latest-wins merge for discoverability."""
-    from .joins import latest_wins
-
-    return latest_wins(df, key, ts, *tie_break)
-
-
 def last_non_null_per_key(df: DataFrame, key: str, ts: str, value_cols: list[str], *tie_break: str) -> DataFrame:
     """W1's per-field form (ref ais-proxy/server.js:390-592): the
     vessel cache keeps the latest NON-NULL value per field per key
@@ -53,13 +47,3 @@ def last_non_null_per_key(df: DataFrame, key: str, ts: str, value_cols: list[str
     cols = [F.col(key)] + [F.last(c, ignorenulls=True).over(w).alias(c) for c in value_cols]
     cols.append(F.max(F.col(ts)).over(w).alias(ts))
     return df.select(*cols).dropDuplicates([key])
-
-
-def tumbling_counts(df: DataFrame, ts: str, duration: str, extra_keys: list[str] | None = None) -> DataFrame:
-    """W3 (ref ais-proxy/server.js:193-208 rate window): event counts
-    per time bucket (per extra key). Batch analog of the streaming
-    rate-limit window; in streaming this is `window()` + watermark."""
-    keys = [F.window(F.col(ts), duration).alias("win")] + [F.col(k) for k in (extra_keys or [])]
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).select(
-        F.col("win.start").alias("win_start"), *(extra_keys or []), "n"
-    )

@@ -610,29 +610,6 @@ def simhash16_md5(df: DataFrame, text_col: str, id_col: str, *, alias: str = "si
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, *, n: int = 3, threshold: float = 0.5, bucket_col: str | None = None
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs (optionally only
-    within a bucket column to bound the quadratic blowup — at scale
-    callers pass an LSH band or length bucket)."""
-    base = df.select(F.col(id_col).alias("doc_id"), shingles(text_col, n).alias("sh"),
-                     *( [F.col(bucket_col).alias("bucket")] if bucket_col else []))
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.doc_id") < F.col("b.doc_id")
-    if bucket_col:
-        cond = cond & (F.col("a.bucket") == F.col("b.bucket"))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.round(jaccard(F.col("a.sh"), F.col("b.sh")), 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def dataset_diff(
     old: DataFrame, new: DataFrame, id_col: str, content_cols: list[str]
 ) -> DataFrame:

@@ -5,13 +5,15 @@ accepts six wire shapes — AIS-catcher ``{msgs:[...]}`` arrays, minimal
 ``{mmsi,lat,lon}``, full jsonais ``{groups:[{msgs:[...]}]}``, APRS,
 direct canonical, bare arrays — and emits one canonical record.
 
-Spark shape: parse each format with an explicit schema + PERMISSIVE
-``from_json``, emit a normalizing ``select`` per format, and
-``unionByName`` the six branches (``normalize_any``). Payloads no
-branch claims are observable via ``unmatched_records`` as a
-dead-letter output instead of killing the batch (failure isolation,
-T6). At scale each branch is a filter+project over the same scan —
-one pass.
+Spark shape: each format has an explicit schema for a PERMISSIVE
+``from_json`` and one record builder that maps the parsed payload to
+an array of canonical structs. ``normalize_any`` reads the input once:
+one projection parses each payload under every schema, and one
+``inline`` of the concatenated record arrays emits the rows — no
+union of per-format branches, so the source is scanned once.
+``unmatched_records`` tests the same arrays, so every payload with no
+valid record lands in the dead-letter output instead of killing the
+batch or vanishing (failure isolation, T6).
 """
 
 from __future__ import annotations
@@ -58,73 +60,108 @@ def _is_array_payload(raw: Column) -> Column:
     return raw.rlike(r"^\s*\[")
 
 
+def _record(fmt: str, *values: Column) -> Column:
+    """One canonical record: ``values`` are the CANONICAL_FIELDS
+    before ``source_format``, which is ``fmt``."""
+    fields = [v.alias(n) for n, v in zip(CANONICAL_FIELDS[:-1], values, strict=True)]
+    return F.struct(*fields, F.lit(fmt).alias("source_format"))
+
+
+def _null(dtype: str) -> Column:
+    return F.lit(None).cast(dtype)
+
+
+def _valid(r: Column | DataFrame) -> Column:
+    """normalize_any's validity filter, on a record or on its rows."""
+    return r["mmsi"].isNotNull() & r["lat"].between(-90, 90) & r["lon"].between(-180, 180)
+
+
+# Record builders: the payload parsed under the format's schema ->
+# array<canonical struct>, null or empty when the format does not
+# claim the payload. Each format's field mapping lives only here.
+
+
+def _catcher_records(p: Column) -> Column:
+    def rec(m: Column) -> Column:
+        ts = F.to_timestamp(m["rxtime"], "yyyyMMddHHmmss")
+        return _record("catcher", m["mmsi"], m["lat"], m["lon"], m["speed"], m["course"], F.trim(m["shipname"]), ts)
+
+    return F.transform(p["msgs"], rec)
+
+
+def _minimal_records(p: Column) -> Column:
+    no_double, ts = _null("double"), F.to_timestamp(p["ts"])
+    rec = _record("minimal", p["mmsi"], p["lat"], p["lon"], no_double, no_double, _null("string"), ts)
+    return F.when(p["mmsi"].isNotNull() & p["lat"].isNotNull(), F.array(rec))
+
+
+def _groups_records(p: Column) -> Column:
+    def rec(m: Column) -> Column:
+        ts = F.to_timestamp(m["time_utc"])
+        return _record("groups", m["userid"], m["latitude"], m["longitude"], m["sog"], m["cog"], F.trim(m["name"]), ts)
+
+    # coalesce: flatten is null if any group's msgs is null
+    return F.flatten(F.transform(p["groups"], lambda g: F.coalesce(F.transform(g["msgs"], rec), F.array())))
+
+
+def _direct_records(p: Column) -> Column:
+    ts = F.to_timestamp(p["event_ts"])
+    rec = _record("direct", p["mmsi"], p["lat"], p["lon"], p["speed"], p["course"], F.trim(p["name"]), ts)
+    return F.when(p["mmsi"].isNotNull() & p["event_ts"].isNotNull(), F.array(rec))
+
+
+def _aprs_records(p: Column) -> Column:
+    # try_cast: ANSI mode makes a plain cast THROW on 'ZL1ABC'
+    mmsi, ts = p["call"].try_cast("bigint"), F.to_timestamp(p["time"])
+    rec = _record("aprs", mmsi, p["lat"], p["lng"], p["speed"], p["course"], _null("string"), ts)
+    return F.when(mmsi.isNotNull() & p["lat"].isNotNull() & p["lng"].isNotNull(), F.array(rec))
+
+
+def _array_records(p: Column) -> Column:
+    def rec(m: Column) -> Column:
+        ts = F.to_timestamp(m["event_ts"])
+        return _record("array", m["mmsi"], m["lat"], m["lon"], m["speed"], m["course"], F.trim(m["name"]), ts)
+
+    return F.transform(F.filter(p, lambda m: m["mmsi"].isNotNull() & m["lat"].isNotNull()), rec)
+
+
+# format -> (from_json schema, record builder)
+_FORMATS = {
+    "catcher": (_CATCHER_SCHEMA, _catcher_records),
+    "groups": (_GROUPS_SCHEMA, _groups_records),
+    "direct": (_DIRECT_SCHEMA, _direct_records),
+    "minimal": (_MINIMAL_SCHEMA, _minimal_records),
+    "aprs": (_APRS_SCHEMA, _aprs_records),
+    "array": (_ARRAY_SCHEMA, _array_records),
+}
+
+
+def _normalize(df: DataFrame, raw_col: str, fmt: str) -> DataFrame:
+    schema, build = _FORMATS[fmt]
+    parsed = df.select(_parse(F.col(raw_col), schema).alias("p"))
+    return parsed.select(F.inline(build(F.col("p"))))
+
+
 def normalize_catcher(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """AIS-catcher shape: {"msgs":[{mmsi,lat,lon,speed,course,shipname,rxtime}]}.
     rxtime is compact 'yyyyMMddHHmmss' (ref server.js:1218-1227)."""
-    parsed = df.select(_parse(F.col(raw_col), _CATCHER_SCHEMA).alias("p"))
-    msg = parsed.where(F.col("p.msgs").isNotNull()).select(F.explode("p.msgs").alias("m"))
-    return msg.select(
-        F.col("m.mmsi").alias("mmsi"),
-        F.col("m.lat").alias("lat"),
-        F.col("m.lon").alias("lon"),
-        F.col("m.speed").alias("speed"),
-        F.col("m.course").alias("course"),
-        F.trim(F.col("m.shipname")).alias("name"),
-        F.to_timestamp(F.col("m.rxtime"), "yyyyMMddHHmmss").alias("event_ts"),
-        F.lit("catcher").alias("source_format"),
-    )
+    return _normalize(df, raw_col, "catcher")
 
 
 def normalize_minimal(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """Minimal shape: {"mmsi","lat","lon","ts"} (ISO-8601 ts)."""
-    p = df.select(_parse(F.col(raw_col), _MINIMAL_SCHEMA).alias("p")).where(
-        F.col("p.mmsi").isNotNull() & F.col("p.lat").isNotNull()
-    )
-    return p.select(
-        F.col("p.mmsi").alias("mmsi"),
-        F.col("p.lat").alias("lat"),
-        F.col("p.lon").alias("lon"),
-        F.lit(None).cast("double").alias("speed"),
-        F.lit(None).cast("double").alias("course"),
-        F.lit(None).cast("string").alias("name"),
-        F.to_timestamp("p.ts").alias("event_ts"),
-        F.lit("minimal").alias("source_format"),
-    )
+    return _normalize(df, raw_col, "minimal")
 
 
 def normalize_groups(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """Full jsonais shape: {"groups":[{"msgs":[{userid,latitude,...}]}]}
-    — double explode (ref server.js:1098-1136)."""
-    parsed = df.select(_parse(F.col(raw_col), _GROUPS_SCHEMA).alias("p"))
-    grp = parsed.where(F.col("p.groups").isNotNull()).select(F.explode("p.groups").alias("g"))
-    msg = grp.select(F.explode("g.msgs").alias("m"))
-    return msg.select(
-        F.col("m.userid").alias("mmsi"),
-        F.col("m.latitude").alias("lat"),
-        F.col("m.longitude").alias("lon"),
-        F.col("m.sog").alias("speed"),
-        F.col("m.cog").alias("course"),
-        F.trim(F.col("m.name")).alias("name"),
-        F.to_timestamp("m.time_utc").alias("event_ts"),
-        F.lit("groups").alias("source_format"),
-    )
+    — every message of every group (ref server.js:1098-1136)."""
+    return _normalize(df, raw_col, "groups")
 
 
 def normalize_direct(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """Already-canonical shape, passed through with type coercion."""
-    p = df.select(_parse(F.col(raw_col), _DIRECT_SCHEMA).alias("p")).where(
-        F.col("p.mmsi").isNotNull() & F.col("p.event_ts").isNotNull()
-    )
-    return p.select(
-        F.col("p.mmsi").alias("mmsi"),
-        F.col("p.lat").alias("lat"),
-        F.col("p.lon").alias("lon"),
-        F.col("p.speed").alias("speed"),
-        F.col("p.course").alias("course"),
-        F.trim(F.col("p.name")).alias("name"),
-        F.to_timestamp("p.event_ts").alias("event_ts"),
-        F.lit("direct").alias("source_format"),
-    )
+    return _normalize(df, raw_col, "direct")
 
 
 def normalize_aprs(df: DataFrame, raw_col: str = "raw") -> DataFrame:
@@ -132,113 +169,72 @@ def normalize_aprs(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     is the numeric callsign, longitude rides as ``lng``
     (ref server.js:1140-1168). Non-numeric callsigns cast to NULL and
     are dropped, exactly as the reference's parseInt guard does."""
-    p = df.select(_parse(F.col(raw_col), _APRS_SCHEMA).alias("p")).where(
-        F.col("p.call").isNotNull() & F.col("p.lat").isNotNull() & F.col("p.lng").isNotNull()
-    )
-    return p.select(
-        # try_cast: ANSI mode makes a plain cast THROW on 'ZL1ABC'
-        F.col("p.call").try_cast("bigint").alias("mmsi"),
-        F.col("p.lat").alias("lat"),
-        F.col("p.lng").alias("lon"),
-        F.col("p.speed").alias("speed"),
-        F.col("p.course").alias("course"),
-        F.lit(None).cast("string").alias("name"),
-        F.to_timestamp("p.time").alias("event_ts"),
-        F.lit("aprs").alias("source_format"),
-    ).where(F.col("mmsi").isNotNull())
+    return _normalize(df, raw_col, "aprs")
 
 
 def normalize_array(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """Bare-array shape: ``[{...}, ...]`` of canonical-ish messages
     (ref server.js:1196-1203 recurses per element; the batch analog
-    emits EVERY valid element, consistent with how the catcher branch
-    explodes all of ``msgs``)."""
+    emits EVERY valid element, consistent with how the catcher format
+    emits all of ``msgs``)."""
+    return _normalize(df.where(_is_array_payload(F.col(raw_col))), raw_col, "array")
+
+
+def _parsed(df: DataFrame, raw_col: str) -> DataFrame:
+    """``raw`` plus one column per format: the payload parsed under
+    its schema — object schemas for object payloads only, the array
+    schema for array payloads only."""
     raw = F.col(raw_col)
-    p = df.where(_is_array_payload(raw)).select(
-        F.explode(_parse(raw, _ARRAY_SCHEMA)).alias("m")
-    )
-    return p.where(F.col("m.mmsi").isNotNull() & F.col("m.lat").isNotNull()).select(
-        F.col("m.mmsi").alias("mmsi"),
-        F.col("m.lat").alias("lat"),
-        F.col("m.lon").alias("lon"),
-        F.col("m.speed").alias("speed"),
-        F.col("m.course").alias("course"),
-        F.trim(F.col("m.name")).alias("name"),
-        F.to_timestamp("m.event_ts").alias("event_ts"),
-        F.lit("array").alias("source_format"),
-    )
+    is_array = _is_array_payload(raw)
+    parses = [
+        F.when(is_array if fmt == "array" else ~is_array, _parse(raw, schema)).alias(fmt)
+        for fmt, (schema, _) in _FORMATS.items()
+    ]
+    return df.select(raw.alias("raw"), *parses)
+
+
+def _records() -> Column:
+    """Every canonical record of a ``_parsed`` row, valid or not: an
+    array, never null. One format claims a payload at most: the object
+    formats differ in field shape, and minimal (a subset of direct's
+    fields) takes only what direct leaves."""
+    recs = {fmt: build(F.col(fmt)) for fmt, (_, build) in _FORMATS.items()}
+    recs["minimal"] = F.when(F.col("direct")["event_ts"].isNull(), recs["minimal"])
+    return F.concat(*[F.coalesce(r, F.array()) for r in recs.values()])
 
 
 def normalize_any(df: DataFrame, raw_col: str = "raw") -> DataFrame:
-    """Route every payload through all six format branches and union
-    the results — the Spark analog of the reference's if/else format
-    sniffing. A payload matches exactly one branch (each branch
-    filters on its discriminating fields; object branches are
-    mutually exclusive by field shape, the array branch by the
-    leading ``[``), so the union is disjoint. Catalyst shares the
-    scan across branches; this is one pass over the input at any
-    scale. Payloads claimed by NO branch are available from
-    ``unmatched_records`` as a dead-letter side output (T6).
+    """Normalize every payload, whatever its wire format — the Spark
+    analog of the reference's if/else format sniffing — into
+    CANONICAL_FIELDS rows, dropping invalid records (null mmsi,
+    out-of-range coordinates). One scan: one parse projection, then
+    one ``inline`` of every format's records. Payloads with no valid
+    record are available from ``unmatched_records`` as a dead-letter
+    side output (T6).
     """
-    obj = df.where(~_is_array_payload(F.col(raw_col)))
-    branches = [
-        normalize_catcher(obj, raw_col),
-        normalize_groups(obj, raw_col),
-        normalize_direct(obj, raw_col),
-        # minimal last: its fields are a subset of direct's, so
-        # exclude payloads the direct branch already claimed
-        normalize_minimal(
-            obj.where(_parse(F.col(raw_col), _DIRECT_SCHEMA)["event_ts"].isNull()), raw_col
-        ),
-        normalize_aprs(obj, raw_col),
-        normalize_array(df, raw_col),
-    ]
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.where(
-        F.col("mmsi").isNotNull() & F.col("lat").between(-90, 90) & F.col("lon").between(-180, 180)
-    )
-
-
-def _emits(mmsi: Column, lat: Column, lon: Column) -> Column:
-    """Would this record survive normalize_any's final validity filter?"""
-    return mmsi.isNotNull() & lat.between(-90, 90) & lon.between(-180, 180)
+    # inline over an expression, not a column: over a column the
+    # optimizer infers a non-empty filter below the parse and parses twice
+    rows = _parsed(df, raw_col).select(F.inline(_records()))
+    return rows.where(_valid(rows))
 
 
 def unmatched_records(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """Dead-letter side output: every payload that produces NO
     canonical row — garbage, truncated JSON, unknown shapes, AND
-    shapes a branch parses but whose records all fail the validity
-    filter (out-of-range coordinates, null mmsi). The per-branch
-    predicates mirror each branch's EMISSION condition exactly, so
-    normalize_any(df) ∪ unmatched_records(df) covers the input: no
-    record can vanish between the two outputs (the silent-drop mode
-    this T6 side channel exists to prevent). The batch analog of the
-    reference returning null → the proxy dropping the frame, but kept
+    shapes a format parses but whose records all fail the validity
+    filter (out-of-range coordinates, null mmsi). A payload is dead
+    when none of the records ``normalize_any`` inlines is valid, so
+    each payload lands in exactly one of the two outputs: no record
+    can vanish between them (the silent-drop mode this T6 side
+    channel exists to prevent). The batch analog of the reference
+    returning null → the proxy dropping the frame, but kept
     observable instead of silent."""
-    raw = F.col(raw_col)
-    catcher = F.exists(
-        _parse(raw, _CATCHER_SCHEMA)["msgs"],
-        lambda m: _emits(m["mmsi"], m["lat"], m["lon"]),
-    )
-    groups = F.exists(
-        _parse(raw, _GROUPS_SCHEMA)["groups"],
-        lambda g: F.exists(g["msgs"], lambda m: _emits(m["userid"], m["latitude"], m["longitude"])),
-    )
-    direct_p = _parse(raw, _DIRECT_SCHEMA)
-    direct = direct_p["event_ts"].isNotNull() & _emits(
-        direct_p["mmsi"], direct_p["lat"], direct_p["lon"]
-    )
-    minimal_p = _parse(raw, _MINIMAL_SCHEMA)
-    minimal = _emits(minimal_p["mmsi"], minimal_p["lat"], minimal_p["lon"])
-    aprs_p = _parse(raw, _APRS_SCHEMA)
-    aprs = _emits(aprs_p["call"].try_cast("bigint"), aprs_p["lat"], aprs_p["lng"])
-    arr = _is_array_payload(raw) & F.exists(
-        _parse(raw, _ARRAY_SCHEMA), lambda m: _emits(m["mmsi"], m["lat"], m["lon"])
-    )
-    claimed = F.coalesce(catcher | groups | direct | minimal | aprs | arr, F.lit(False))
-    return df.where(~claimed).select(raw.alias("corrupt_record"))
+    # inline_outer turns a payload with no valid record into one
+    # all-null row; a filter over a generator's output cannot be
+    # pushed into the parse (which would then run once per reference)
+    valid = F.filter(_records(), _valid)
+    rows = _parsed(df, raw_col).select("raw", F.inline_outer(valid))
+    return rows.where(F.col("mmsi").isNull()).select(F.col("raw").alias("corrupt_record"))
 
 
 # -- S2: CloudTAK CoT contact frames -------------------------------------
@@ -272,10 +268,9 @@ def normalize_cot(
     lat, event_ts)``. ``contact_id`` falls back from ``data.id`` to
     the callsign (the reference's Map key fallback chain). ``group``
     parses under BOTH wire forms — string and ``{name}`` object — via
-    two PERMISSIVE ``from_json`` passes coalesced together (the same
-    one-scan branch trick as :func:`normalize_any`: a mismatched
-    field is null under PERMISSIVE, so exactly one form claims each
-    frame). ``group_colors`` is driver-side config baked into a
+    two PERMISSIVE ``from_json`` parses of the same column, coalesced
+    in one projection (a mismatched field is null under PERMISSIVE,
+    so exactly one form claims each frame). ``group_colors`` is driver-side config baked into a
     ``create_map`` literal (S16 pattern) — no join, no UDF, pure
     codegen at any scale."""
     raw = F.col(raw_col)
