@@ -11,14 +11,17 @@ from utils_infra_spark.functions.datetimes import (
     parse_aishub,
     parse_compact_ts,
     parse_dmy_hm,
+    parse_long_nz,
     relative_age,
 )
-from utils_infra_spark.functions.geo import point_in_polygon
+from utils_infra_spark.functions.geo import degree_distance, point_in_polygon
 from utils_infra_spark.functions.strings import (
     callsign_fallback,
     fold_diacritics,
+    sanitize_log,
     zero_pad,
 )
+from utils_infra_spark.operators.filters import ci_contains_any_element
 from utils_infra_spark.operators.joins import upsert_latest
 from utils_infra_spark.plans.styling import apply_style_rules
 
@@ -35,6 +38,26 @@ def test_parse_compact_ts(spark):
 def test_parse_dmy_hm_and_tba(spark):
     assert str(one(spark, parse_dmy_hm(F.lit("20/02/2026 17:24")))) == "2026-02-20 17:24:00"
     assert one(spark, parse_dmy_hm(F.lit("TBA"))) is None
+
+
+def test_parse_long_nz(spark):
+    v = one(spark, parse_long_nz(F.lit("Friday, February 20, 2026 at 08:30")))
+    assert str(v) == "2026-02-20 08:30:00"
+
+
+def test_sanitize_log_strips_control_chars(spark):
+    assert one(spark, sanitize_log(F.lit("a\x00b\x1fc\x7fd\té"))) == "abcdé"
+
+
+def test_degree_distance(spark):
+    v = one(spark, degree_distance(F.lit(-41.0), F.lit(174.0), F.lit(-44.0), F.lit(178.0)))
+    assert v == pytest.approx(5.0)
+
+
+def test_ci_contains_any_element(spark):
+    arr = F.array(F.lit("Wellington"), F.lit("Hutt Valley"))
+    assert one(spark, ci_contains_any_element(arr, "HUTT")) is True
+    assert one(spark, ci_contains_any_element(arr, "porirua")) is False
 
 
 def test_aishub_roundtrip(spark):

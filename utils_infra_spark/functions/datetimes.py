@@ -54,10 +54,11 @@ def parse_dmy_hm(col: Column | str) -> Column:
 
 def parse_long_nz(col: Column | str) -> Column:
     """'Friday, February 20, 2026 at 08:30' (ref tlc.js:8-20):
-    strip the ' at ' then parse with a long pattern."""
+    strip the weekday and the ' at ', then parse with a long pattern
+    (Spark's datetime parser rejects the 'EEEE' weekday field)."""
     col = F.col(col) if isinstance(col, str) else col
-    stripped = F.regexp_replace(col, r"\s+at\s+", " ")
-    return F.to_timestamp(stripped, "EEEE, MMMM d, yyyy HH:mm")
+    stripped = F.regexp_replace(F.regexp_replace(col, r"^\s*\w+,\s*", ""), r"\s+at\s+", " ")
+    return F.to_timestamp(stripped, "MMMM d, yyyy HH:mm")
 
 
 def format_aishub(col: Column | str) -> Column:

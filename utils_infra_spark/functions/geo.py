@@ -39,21 +39,6 @@ def mercator_y_sql(lat: str) -> str:
     return f"((1.0D - ln(tan(radians({lat})) + 1.0D / cos(radians({lat}))) / {math.pi!r}D) / 2.0D)"
 
 
-def slippy_tile(lon: Column | str, lat: Column | str, z: int) -> tuple[Column, Column]:
-    """lat/lon → slippy tile (x, y) at zoom z
-    (ref create_nationalmap_mbtiles.py:15-20)."""
-    n = F.lit(float(2**z))
-    x = F.floor(mercator_x(lon) * n).cast("bigint")
-    y = F.floor(mercator_y(lat) * n).cast("bigint")
-    return x, y
-
-
-def tms_flip(y: Column | str, z: int) -> Column:
-    """TMS y-flip (ref create_nationalmap_mbtiles.py:104): (2^z-1)-y."""
-    y = F.col(y) if isinstance(y, str) else y
-    return F.lit(2**z - 1) - y
-
-
 def quadkey(x: Column, y: Column, z: int) -> Column:
     """Tile → quadkey string (interleaved bits), a locality-preserving
     partition key for tile tables at scale."""

@@ -57,13 +57,6 @@ def ascii_guarded(col: Column | str, context: str) -> Column:
     )
 
 
-def ci_fold_eq(a: Column | str, b: Column | str) -> Column:
-    """Case- AND diacritic-insensitive equality."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.lower(fold_diacritics(a)) == F.lower(fold_diacritics(b))
-
-
 def sanitize_log(col: Column | str) -> Column:
     """Strip control characters (ref ais-proxy/server.js:97-100)."""
     col = F.col(col) if isinstance(col, str) else col

@@ -360,13 +360,13 @@ def brute_force_topk_codegen(
 
 
 # Measured crossover between the all-JVM codegen top-k and the Arrow
-# matmul twin (tools/scale_curve_topk_auto.py, sf0.1 embeddings): the
-# codegen plan carries |Q| literal arrays + |Q| aggregate columns, so
-# both its plan-construction and execution cost grow with |Q| while
+# matmul twin (`tools/scale_curve.py topk_q_codegen|topk_q_arrow <|Q|>`):
+# the codegen plan carries |Q| literal arrays + |Q| aggregate columns,
+# so both its plan-construction and execution cost grow with |Q| while
 # the Arrow kernel's matmul is flat in |Q| — it decisively crosses by
 # |Q|≈32-64 in every measured regime, and codegen's only proven win
 # is the small-|Q| cached-input bench regime (see the two measured
-# tables in the script docstring before moving this).
+# tables in docs/SCALE.md, Round 11, before moving this).
 TOPK_CODEGEN_MAX_QUERIES = 32
 
 

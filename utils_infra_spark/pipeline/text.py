@@ -74,15 +74,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """A BPE-flavored proxy: count word-piece units as
-    ceil(chars/4) per word, the common ~4-chars-per-token rule."""
-    toks = tokens(text)
-    return F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.ceil(F.length(t) / 4.0).cast("long")
-    )
-
-
 def avg_token_len(text: Column | str) -> Column:
     toks = tokens(text)
     total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
@@ -93,12 +84,6 @@ def stopword_ratio(text: Column | str, stopwords: list[str]) -> Column:
     toks = tokens(text)
     sw = F.size(F.filter(toks, lambda t: F.lower(t).isin(*stopwords)))
     return F.when(F.size(toks) > 0, F.round(sw / F.size(toks), 6)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    text = F.col(text) if isinstance(text, str) else text
-    n_punct = F.length(F.regexp_replace(text, r"[^\.,;:!\?'\"-]", ""))
-    return F.when(F.length(text) > 0, F.round(n_punct / F.length(text), 6)).otherwise(F.lit(0.0))
 
 
 def quality_score(text: Column | str, stopwords: list[str] | None = None) -> Column:
