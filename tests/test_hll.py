@@ -63,6 +63,10 @@ def test_merge_of_partials_equals_direct_sketch(spark):
         (r["idx"], r["m"]) for r in hll_merge(per_day, ["g"]).collect()
     }
     assert merged == direct  # max is associative: any merge tree agrees
+    # the estimate keeps every key column: per-(g, day) equals one day alone
+    by_day = {r["day"]: r["hll_estimate"] for r in hll_distinct(df, ["g", "day"], "u").collect()}
+    assert len(by_day) == 7
+    assert by_day[3] == hll_distinct(df.where("day = 3"), ["g"], "u").collect()[0]["hll_estimate"]
 
 
 def test_estimate_accuracy_and_small_range_branch(spark):
@@ -83,17 +87,13 @@ def test_estimate_accuracy_and_small_range_branch(spark):
 def test_estimate_overflow_regime_no_ansi_error(spark):
     """All 64 registers at the max rho (53) drives raw ≈ 4.1e17 —
     micro-rounding that would overflow BIGINT and ANSI-error the
-    query. Above 1e12 the estimate is the raw double, unrounded, and
-    the Python twin agrees exactly."""
-    from utils_infra_spark.pipeline.sketch import hll_estimate_py
-
+    query. Above 1e12 the estimate is the raw double, unrounded."""
     regs = spark.createDataFrame(
         [("g", i, 53) for i in range(HLL_M)], "g string, idx int, m int"
     )
     est = hll_estimate(regs, ["g"]).collect()[0]["hll_estimate"]
     want = (0.709 * 4096.0 * 9007199254740992.0) / 64.0
     assert est == want
-    assert hll_estimate_py([53] * HLL_M) == want
 
 
 def test_lc_table_matches_formula():
@@ -194,28 +194,10 @@ def test_jl_row_domain_gate(spark):
 
 
 # ------------------------------------------------------ streaming HLL
-def test_hll_estimate_py_matches_sql(spark):
-    """The Python estimate twin must be value-identical to the batch
-    SQL on real register sets (same integer harmonic sum, same float
-    op order, same literal LC table)."""
-    from utils_infra_spark.pipeline.sketch import hll_estimate_py
-
-    rows = [("big", f"u{i}") for i in range(3000)] + [
-        ("small", f"v{i}") for i in range(10)
-    ]
-    df = spark.createDataFrame(rows, "g string, u string")
-    sql_est = {r["g"]: r["hll_estimate"] for r in hll_distinct(df, ["g"], "u").collect()}
-    regs = {}
-    for r in hll_sketch(df, ["g"], "u").collect():
-        regs.setdefault(r["g"], [0] * HLL_M)[r["idx"]] = r["m"]
-    for g, dense in regs.items():
-        assert hll_estimate_py(dense) == sql_est[g], g
-
-
 def test_hll_stream_preserves_int_key_type(spark, tmp_path):
-    """The state-output key schema derives from the input stream — an
-    int key column must come out int (hard-coding string mistyped it
-    before), and the estimates must still match batch."""
+    """An int key column must come out int (the stream's groupBy keeps
+    key types, as the batch sketch's does), and the estimates must
+    still match batch."""
     import json
     import os
 
@@ -265,7 +247,8 @@ def test_hll_stream_matches_batch_estimate(spark, tmp_path):
     """Stateful streaming HLL: rows split across micro-batches in an
     arbitrary order must end at the IDENTICAL estimate the batch
     sketch computes on the union — max-merge is order-free and the
-    estimate math is shared."""
+    estimate math is shared. The state lives in a JVM streaming
+    aggregation, not a Python operator."""
     import json
     import os
 
@@ -312,3 +295,5 @@ def test_hll_stream_matches_batch_estimate(spark, tmp_path):
         ).collect()
     }
     assert final == batch
+    ops = {op["operatorName"] for p in q.recentProgress for op in p["stateOperators"]}
+    assert ops == {"stateStoreSave"}

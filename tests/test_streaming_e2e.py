@@ -1,9 +1,11 @@
 """End-to-end Structured Streaming tests (T1-T4): a real file-source
-stream driven through both keyed-upsert operators (the streaming
-aggregation without a TTL, applyInPandasWithState with one), checked
-for parity with the batch replay — SURVEY §7 hard part #1's
-correctness contract — plus a watermarked tumbling-window aggregation
-(W3 streaming form) and ``normalize_any`` reading a stream once.
+stream driven through the two keyed-upsert forms — one operator each:
+the streaming aggregation without a TTL, applyInPandasWithState with
+one — checked for parity with the batch replay (SURVEY §7 hard part
+#1's correctness contract), including bigint and string tiebreaks;
+plus a watermarked tumbling-window aggregation (W3 streaming form),
+``normalize_any`` reading a stream once, near-dup suppression,
+interval joins and count-min merges.
 """
 
 from __future__ import annotations
@@ -544,22 +546,24 @@ def test_stream_upsert_state_operator_per_form(parity_runs):
     assert parity_runs["ttl"][1] == {"applyInPandasWithState"}
 
 
-def test_stream_upsert_tiebreak_both_forms(spark, tmp_path):
+@pytest.mark.parametrize("tb_type", ["bigint", "string"])
+def test_stream_upsert_tiebreak_both_forms(spark, tmp_path, tb_type):
     """Equal event times split across files, the tiebreak winner
     arriving FIRST: both stream forms must keep the higher
     (ts, seq) value — not the later-processed one, and not the
     greatest value — exactly as the batch replay with the same
-    tiebreak."""
-    schema = SCHEMA + ", seq bigint"
+    tiebreak, whatever the tiebreak column's type."""
+    seq = (lambda n: n) if tb_type == "bigint" else (lambda n: "abcde"[n - 1])
+    schema = SCHEMA + f", seq {tb_type}"
     src = str(tmp_path / "tb_src")
     write_files(src, [
         [
-            _rec(7, "10:00:00", lat=-41.0, lon=174.0, name="NEW", seq=2),
-            _rec(8, "10:00:00", lat=-30.0, name="ZED", seq=1),
+            _rec(7, "10:00:00", lat=-41.0, lon=174.0, name="NEW", seq=seq(2)),
+            _rec(8, "10:00:00", lat=-30.0, name="ZED", seq=seq(1)),
         ],
         [
-            _rec(7, "10:00:00", lat=-40.0, lon=175.0, name="OLD", ship_type=70.0, seq=1),
-            _rec(8, "10:00:00", lat=-35.0, name="ABLE", seq=5),
+            _rec(7, "10:00:00", lat=-40.0, lon=175.0, name="OLD", ship_type=70.0, seq=seq(1)),
+            _rec(8, "10:00:00", lat=-35.0, name="ABLE", seq=seq(5)),
         ],
     ])
     want = batch_replay(spark, src, schema, tiebreak="seq")
@@ -685,121 +689,6 @@ def test_stream_near_dup_suppression(spark, tmp_path):
     )
     _drain_and_stop(q2)  # ProcessingTimeTimeout state: never self-terminates
     assert sorted(emitted2) == [1, 2, 4]
-
-
-def test_tws_upsert_plan_builds_and_analyzes(spark, tmp_path):
-    """transformWithStateInPandas twin, plan level: the operator must
-    analyze cleanly and plant a TransformWithStateInPySpark node over
-    the keyed stream. EXECUTION is deliberately not attempted here:
-    Spark's tws driver worker imports google.protobuf at query start
-    and this container ships no protobuf — a live query fails fast
-    with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE (measured).
-    The merge semantics are covered by the direct processor test
-    below plus the shared merge_group fuzz tests; keyed_upsert_stream's
-    TTL form (applyInPandasWithState over the same merge_group)
-    carries the e2e parity proof."""
-    from utils_infra_spark.streaming.upsert import keyed_upsert_stream_tws
-
-    src_dir = str(tmp_path / "tws_src")
-    write_files(src_dir, [BATCH1, BATCH2])
-    stream = spark.readStream.schema(SCHEMA).json(src_dir)
-    upserts = keyed_upsert_stream_tws(
-        stream,
-        "mmsi",
-        "ts",
-        VALUE_COLS,
-        output_schema="mmsi int, ts timestamp, lat double, lon double, name string, ship_type double",
-        state_schema="ts timestamp, lat double, lon double, name string, ship_type double",
-        ttl_ms=3_600_000,
-    )
-    assert upserts.isStreaming
-    assert [f.name for f in upserts.schema.fields] == [
-        "mmsi", "ts", "lat", "lon", "name", "ship_type",
-    ]
-    plan = upserts._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithState" in plan
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        self.ttl_ms = ttlDurationMs
-        return self.states.setdefault(name, _FakeValueState())
-
-
-def test_tws_processor_merge_matches_batch_replay(spark):
-    """Drive the tws StatefulProcessor directly (fake handle/state —
-    the surface Spark's driver worker would provide) through the same
-    two micro-batches as the e2e scenario; its final state must equal
-    the batch window replay, per key, exactly like the
-    applyInPandasWithState form."""
-    import pandas as pd
-
-    from utils_infra_spark.streaming.upsert import make_upsert_processor
-
-    cls = make_upsert_processor(
-        "mmsi", "ts", VALUE_COLS,
-        "ts timestamp, lat double, lon double, name string, ship_type double, "
-        + ", ".join(f"__ts_{c} timestamp" for c in VALUE_COLS),
-        ttl_ms=3_600_000,
-    )
-    proc = cls()
-    handle = _FakeHandle()
-    proc.init(handle)
-    assert handle.ttl_ms == 3_600_000
-
-    def to_pdf(batch, mmsi):
-        pdf = pd.DataFrame([r for r in batch if r["mmsi"] == mmsi])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        return pdf
-
-    # one processor+state per key models Spark's per-key state
-    # isolation (a single shared fake ValueState would cross-
-    # contaminate keys)
-    finals = {}
-    for mmsi in (1, 2, 3):
-        proc_k = cls()
-        proc_k.init(_FakeHandle())
-        last = None
-        for batch in (BATCH1, BATCH2):
-            rows = [r for r in batch if r["mmsi"] == mmsi]
-            if not rows:
-                continue
-            for out in proc_k.handleInputRows((mmsi,), iter([to_pdf(batch, mmsi)]), None):
-                last = out.iloc[0]
-        finals[mmsi] = last
-
-    batch_df = spark.read.json(
-        spark.sparkContext.parallelize([__import__("json").dumps(r) for b in (BATCH1, BATCH2) for r in b]),
-        schema=SCHEMA,
-    )
-    want = keyed_upsert_batch(batch_df, "mmsi", "ts", VALUE_COLS).toPandas().set_index("mmsi")
-    for mmsi in (1, 2, 3):
-        got = finals[mmsi]
-        for c in VALUE_COLS:
-            got_v, want_v = got[c], want.loc[mmsi, c]
-            same_null = (got_v is None or got_v != got_v) and (want_v is None or want_v != want_v)
-            assert same_null or got_v == want_v, (mmsi, c, got_v, want_v)
-    assert finals[1]["lat"] == -41.1 and finals[1]["name"] == "ALPHA"
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):

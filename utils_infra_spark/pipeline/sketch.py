@@ -202,22 +202,31 @@ def hll_estimate(registers: DataFrame, key_cols: list[str]) -> DataFrame:
     The large-range (2^32-scale) correction is omitted: it exists for
     32-bit hashes; this sketch draws 52 bits.
     """
-    lc = "array(" + ", ".join(str(v) for v in _LC_MICRO) + ")"
-    keys = ", ".join(key_cols)
     agg = registers.groupBy(*key_cols).agg(
         F.expr("CAST(SUM(SHIFTLEFT(CAST(1 AS BIGINT), 53 - m)) AS BIGINT) AS s_present"),
         F.expr(f"CAST({HLL_M} - COUNT(1) AS INT) AS v_zero"),
     )
-    return agg.selectExpr(
-        keys,
-        f"s_present + CAST(v_zero AS BIGINT) * SHIFTLEFT(CAST(1 AS BIGINT), 53) AS __s_int",
-        "v_zero AS __v",
-    ).selectExpr(
-        keys,
+    return _hll_finish(
+        agg.selectExpr(
+            *key_cols,
+            "s_present + CAST(v_zero AS BIGINT) * SHIFTLEFT(CAST(1 AS BIGINT), 53) AS __s_int",
+            "v_zero AS __v",
+        ),
+        key_cols,
+    )
+
+
+def _hll_finish(sums: DataFrame, key_cols: list[str]) -> DataFrame:
+    """The estimate both HLL forms share: ``(keys..., __s_int, __v)``
+    — the integer harmonic sum and the empty-register count — to
+    ``(keys..., hll_estimate)``."""
+    lc = "array(" + ", ".join(str(v) for v in _LC_MICRO) + ")"
+    return sums.selectExpr(
+        *key_cols,
         f"{_HLL_NUM} / CAST(__s_int AS DOUBLE) AS __raw",
         "__v",
     ).selectExpr(
-        keys,
+        *key_cols,
         # micro-rounding is skipped above 1e12: FLOOR(__raw*1e6+0.5)
         # overflows BIGINT once __raw exceeds ~9.2e12 (reachable — all
         # registers at rho=53 gives raw ≈ 4.1e17), which under ANSI
@@ -241,87 +250,41 @@ def hll_distinct(df: DataFrame, key_cols: list[str], value_col: str) -> DataFram
     return hll_estimate(hll_sketch(df, key_cols, value_col), key_cols)
 
 
-def hll_estimate_py(regs: list[int]) -> float:
-    """Pure-Python twin of :func:`hll_estimate`'s SQL — the SAME
-    integer harmonic sum, the SAME float ops in the SAME order, the
-    SAME precomputed linear-counting table — so a streaming operator
-    holding registers in state emits estimates value-identical to the
-    batch SQL (pinned by test). ``regs`` is the dense 64-slot register
-    list, 0 = never touched."""
-    s_int = sum(1 << (53 - m) for m in regs if m > 0)
-    v = sum(1 for m in regs if m == 0)
-    s_int += v * (1 << 53)
-    raw = (0.709 * 4096.0 * 9007199254740992.0) / float(s_int)
-    if raw <= 2.5 * HLL_M and v > 0:
-        return _LC_MICRO[v - 1] / 1e6
-    if raw < 1e12:  # same no-micro-round-above-1e12 rule as the SQL
-        import math
-
-        return math.floor(raw * 1000000.0 + 0.5) / 1e6
-    return raw
-
-
 def hll_distinct_stream(
     stream_df: DataFrame,
     key_cols: list[str],
     value_col: str,
 ) -> DataFrame:
-    """Streaming approximate COUNT(DISTINCT) per key: the register
-    derivation runs IN-ROW on the stream (same md5 contract as the
-    batch sketch), one ``applyInPandasWithState`` group per key holds
-    the dense 64-register array as state, each micro-batch folds its
-    rows in with ``max`` per register and emits the key's refreshed
-    estimate (update semantics — latest row per key wins downstream).
-
-    Because max-merge is associative/commutative and the estimate
-    math is :func:`hll_estimate_py` (value-identical to the batch
-    SQL), a stream that has seen the same rows as a batch job — in
-    ANY batch split or order — emits the IDENTICAL final estimate
-    (pinned by e2e test). State per key is 64 ints, ~independent of
-    stream length: the streaming twin of the batch sketch's
-    bounded-registers property, and the approximate swap-in when a
-    keyed-upsert job needs per-key distinct counts without holding a
-    user set in state.
+    """Streaming approximate COUNT(DISTINCT) per key, as a JVM
+    streaming aggregation (StateStoreSave in the query progress, no
+    Python worker). The register derivation runs in-row on the stream
+    (same md5 contract as the batch sketch); per key, the state holds
+    the 64-slot register array ``max(CASE WHEN idx = i THEN rho END)``
+    — max per register is associative and commutative, so any
+    micro-batch split and arrival order reach the same registers.
+    Each trigger emits the updated keys' estimates (update mode:
+    latest row per key wins downstream) through :func:`_hll_finish`,
+    the estimate :func:`hll_estimate` uses, so a stream that has seen
+    the same rows as :func:`hll_distinct` emits the identical final
+    estimate (pinned by e2e test). State per key is 64 ints,
+    independent of stream length. A checkpoint written by the earlier
+    ``applyInPandasWithState`` form cannot be restored.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     idx, rho = hll_register_expr(value_col)
     rows = stream_df.where(f"{value_col} IS NOT NULL").selectExpr(
         *key_cols, f"{idx} AS idx", f"{rho} AS rho"
     )
-    n_keys = len(key_cols)
-
-    def fn(key_tuple, pdfs, state: GroupState):
-        regs = list(state.get[0]) if state.exists else [0] * HLL_M
-        seen = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            seen = True
-            for i, r in zip(pdf["idx"].tolist(), pdf["rho"].tolist()):
-                if r > regs[i]:
-                    regs[i] = int(r)
-        if not seen:
-            return
-        state.update((regs,))
-        out = {k: [key_tuple[j]] for j, k in enumerate(key_cols)}
-        out["hll_estimate"] = [hll_estimate_py(regs)]
-        yield pd.DataFrame(out)
-
-    # derive each key column's type from the input schema — hard-coding
-    # `string` would silently mistype (or fail) a stream keyed on e.g.
-    # an int segment column, unlike the batch sketch which preserves
-    # key types through groupBy
-    in_types = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_types[k]}" for k in key_cols)
-    return rows.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key_schema}, hll_estimate double",
-        stateStructType="regs array<int>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    regs = rows.groupBy(*key_cols).agg(
+        F.array(*[F.max(F.when(F.col("idx") == i, F.col("rho"))) for i in range(HLL_M)]).alias("__regs")
     )
+    # an empty register is NULL here and counts 2^53 = 2^(53-0)
+    sums = regs.selectExpr(
+        *key_cols,
+        "aggregate(__regs, CAST(0 AS BIGINT),"
+        " (acc, m) -> acc + SHIFTLEFT(CAST(1 AS BIGINT), 53 - coalesce(m, 0))) AS __s_int",
+        "size(filter(__regs, m -> m IS NULL)) AS __v",
+    )
+    return _hll_finish(sums, key_cols)
 
 
 def _normalized_tokens(

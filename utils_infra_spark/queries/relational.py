@@ -603,8 +603,8 @@ def union_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # disjunctive scan, so the union form reads orders twice — 2x the
     # IO at 100 TB for an identical result (o_orderkey is the table
     # key, but distinct is kept: it is the operator under test and the
-    # oracle's UNION dedups). A/B at sf0.1 (tools/ab_union_distinct.py,
-    # bench methodology, 2 sweeps x 6 runs): union-2-scan 0.36-0.54 s
+    # oracle's UNION dedups). A/B at sf0.1 (bench methodology, input
+    # cache, 2 sweeps x 6 runs, local[32]): union-2-scan 0.36-0.54 s
     # min-warm vs OR-1-scan 0.24-0.30 s — the single scan wins ~35%
     # warm and halves the scan bytes at scale. Oracle unchanged (the
     # UNION SQL is the semantic spec; results are row-identical).

@@ -20,7 +20,11 @@ Engine shape:
     runs;
   - with a TTL, ``applyInPandasWithState`` folding rows through
     :func:`merge_group` with a processing-time timeout — Spark's
-    built-in aggregations have no processing-time eviction.
+    built-in aggregations have no processing-time eviction. State
+    holds each field's value plus its (ts[, tiebreak]) guard, typed
+    like the input columns.
+
+  Each form is the only implementation of its job.
 
   The CORRECTNESS CONTRACT is batch/stream parity: replaying any
   prefix of the stream through the batch form must equal the
@@ -37,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 
 def keyed_upsert_batch(
@@ -122,7 +126,6 @@ def keyed_upsert_stream(
     state_schema: StructType | str,
     ttl_ms: int | None = None,
     tiebreak: str | None = None,
-    tiebreak_type: str = "bigint",
 ):
     """Streaming keyed upsert: one state row per key, per-field
     newest-non-null merge. Use on a streaming DataFrame in ``update``
@@ -139,9 +142,9 @@ def keyed_upsert_stream(
     - ``ttl_ms`` set: ``applyInPandasWithState`` with a
       processing-time timeout (T2 — the reference's 6 h vessel
       retention). ``state_schema`` lists ts + value columns; the
-      per-field event-time guard columns (``__ts_<col> timestamp``,
-      plus ``__tb_<col>`` when ``tiebreak`` is set) are appended
-      automatically.
+      per-field guard columns ``__ts_<col>`` (and ``__tb_<col>`` when
+      ``tiebreak`` is set) are appended automatically, typed like
+      ``ts`` and ``tiebreak`` in ``df``.
 
     Ties: pass the same ``tiebreak`` to ``keyed_upsert_batch`` and
     both forms resolve equal event times the same way. Without it,
@@ -164,7 +167,16 @@ def keyed_upsert_stream(
             output_schema = StructType.fromDDL(output_schema)
         return agg.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in output_schema.fields])
 
-    state_schema, state_fields = _tws_state_layout(state_schema, ts, value_cols, tiebreak, tiebreak_type)
+    # per-field newest-wins guards, typed like the columns they copy:
+    # a guard declared with any other type would coerce the stored
+    # tiebreak on the way into state and corrupt later comparisons
+    guards = [StructField(f"__ts_{c}", df.schema[ts].dataType) for c in value_cols]
+    if tiebreak is not None:
+        guards += [StructField(f"__tb_{c}", df.schema[tiebreak].dataType) for c in value_cols]
+    if isinstance(state_schema, str):
+        state_schema = StructType.fromDDL(state_schema)
+    state_schema = StructType(state_schema.fields + guards)
+    state_fields = state_schema.fieldNames()
 
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.hasTimedOut:
@@ -236,147 +248,3 @@ def sampled_side_effect(
     finally:
         unpersist_rdd_ids(spark, new_ids)
     return n
-
-
-def _tws_state_layout(
-    state_schema: StructType | str,
-    ts: str,
-    value_cols: list[str],
-    tiebreak: str | None,
-    tiebreak_type: str,
-) -> tuple[StructType | str, list[str]]:
-    """Append the per-field newest-wins guard columns to the caller's
-    state schema and return (full schema, field order) — shared by the
-    applyInPandasWithState and transformWithStateInPandas forms so the
-    two state layouts can never drift."""
-    guard_ddl = ", ".join(f"__ts_{c} timestamp" for c in value_cols)
-    if tiebreak is not None:
-        guard_ddl += ", " + ", ".join(f"__tb_{c} {tiebreak_type}" for c in value_cols)
-    if isinstance(state_schema, str):
-        full = state_schema + ", " + guard_ddl
-    else:
-        full = StructType(list(state_schema.fields) + list(StructType.fromDDL(guard_ddl).fields))
-    fields = [ts] + value_cols + [f"__ts_{c}" for c in value_cols]
-    if tiebreak is not None:
-        fields += [f"__tb_{c}" for c in value_cols]
-    return full, fields
-
-
-def make_upsert_processor(
-    key: str,
-    ts: str,
-    value_cols: list[str],
-    state_schema: StructType | str,
-    *,
-    ttl_ms: int | None = None,
-    tiebreak: str | None = None,
-):
-    """StatefulProcessor class for :func:`keyed_upsert_stream_tws`,
-    exposed at module level so its merge behavior is directly
-    unit-testable (instantiate, init() with a fake handle whose
-    getValueState returns a fake ValueState, drive handleInputRows)
-    — the execution path through a live query needs the protobuf
-    package Spark's tws driver worker imports, which this container
-    does not ship."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _UpsertProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("merged", state_schema, ttlDurationMs=ttl_ms)
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            fields = self.state_fields
-            prior = (
-                pd.Series(dict(zip(fields, self._state.get())))
-                if self._state.exists()
-                else None
-            )
-            merged = prior
-            for pdf in rows:
-                if len(pdf):
-                    merged = merge_group(pdf, merged, ts, value_cols, tiebreak)
-            if merged is None:
-                return
-            self._state.update(tuple(merged.get(f) for f in fields))
-            out = {k_col: [k_val] for k_col, k_val in zip([key], key_tuple)}
-            out[ts] = [merged.get(ts)]
-            for c in value_cols:
-                out[c] = [merged.get(c)]
-            yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    _UpsertProcessor.state_fields = _tws_state_layout(
-        state_schema, ts, value_cols, tiebreak, "bigint"
-    )[1]
-    return _UpsertProcessor
-
-
-def keyed_upsert_stream_tws(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    value_cols: list[str],
-    *,
-    output_schema: StructType | str,
-    state_schema: StructType | str,
-    ttl_ms: int | None = None,
-    tiebreak: str | None = None,
-    tiebreak_type: str = "bigint",
-):
-    """The keyed upsert on Spark 4's ``transformWithStateInPandas`` —
-    the modern arbitrary-state API (typed state variables, native
-    per-state TTL, timers, RocksDB-backed) and the forward path for
-    :func:`keyed_upsert_stream`'s TTL (``applyInPandasWithState``)
-    form.
-
-    Identical merge semantics: the processor folds rows through the
-    SAME :func:`merge_group` over the SAME state layout
-    (:func:`_tws_state_layout` is shared), so the batch-replay parity
-    contract transfers unchanged. Differences are operational, and
-    both favor this form at scale:
-
-    - **TTL is per-state-value and store-native** (``ttlDurationMs``
-      on the ValueState): expiry happens inside the state store
-      instead of via the operator's timeout callback, so an idle key
-      needs no group invocation to be evicted. The old form's
-      ProcessingTimeTimeout fires ``hasTimedOut`` callbacks — at
-      100 TB/day of mostly-idle keys, that is a full state sweep of
-      Python round trips per trigger interval.
-    - **RocksDB state store required** (set
-      ``spark.sql.streaming.stateStore.providerClass`` to the
-      RocksDB provider): state lives off-heap with changelog
-      checkpointing, which is what makes 10^9-key state tractable —
-      the HDFS-backed default holds state on the JVM heap.
-
-    Environment honesty: Spark's tws *driver worker* imports
-    ``google.protobuf`` at query start; this container does not ship
-    protobuf, so a live query fails fast at initialization here
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — measured, not
-    assumed). Plan construction, analysis, and the processor's merge
-    logic are all exercised by tests; the applyInPandasWithState
-    form remains the fully-e2e-proven operator in this sandbox.
-
-    Ref parity: same vessel-cache semantics as the reference
-    (ais-proxy/server.js:365-619) — last-writer-wins per FIELD with
-    newer-event-time guard, TTL retention.
-    """
-    full_state_schema, _ = _tws_state_layout(
-        state_schema, ts, value_cols, tiebreak, tiebreak_type
-    )
-    processor_cls = make_upsert_processor(
-        key, ts, value_cols, full_state_schema, ttl_ms=ttl_ms, tiebreak=tiebreak
-    )
-    # state TTL requires the processing-time clock; without TTL the
-    # operator needs no clock at all
-    time_mode = "ProcessingTime" if ttl_ms is not None else "None"
-    return df.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=processor_cls(),
-        outputStructType=output_schema,
-        outputMode="Update",
-        timeMode=time_mode,
-    )
