@@ -333,50 +333,15 @@ def test_top_n_per_group_both_branches(spark):
     ]
 
 
-def test_point_in_polygon_sql_twin_matches_column_builder(spark):
-    # the SQL-text twin must agree with the Column builder everywhere,
-    # including the concave notch and edge-adjacent points
-    from utils_infra_spark.functions.geo import point_in_polygon_sql, ring_sql
-
-    coords = [(0, 0), (10, 0), (10, 4), (4, 4), (4, 10), (0, 10), (0, 0)]
-    ring_col = F.array(*[F.struct(F.lit(float(x)).alias("x"), F.lit(float(y)).alias("y")) for x, y in coords])
-    ring_txt = ring_sql(coords)
-    pts = spark.createDataFrame(
-        [(5.0, 5.0), (2.0, 8.0), (8.0, 2.0), (-1.0, -1.0), (3.9, 9.9), (4.1, 9.9)],
-        "lon double, lat double",
-    )
-    both = pts.select(
-        point_in_polygon(F.col("lon"), F.col("lat"), ring_col).alias("a"),
-        F.expr(point_in_polygon_sql("lon", "lat", ring_txt)).alias("b"),
-    ).collect()
-    for r in both:
-        assert r.a == r.b
-
-
-def test_mercator_sql_twins_match_column_builders(spark):
-    from utils_infra_spark.functions.geo import mercator_x, mercator_x_sql, mercator_y, mercator_y_sql
-
-    pts = spark.createDataFrame(
-        [(-179.5, -84.9), (0.0, 0.0), (174.8, -41.3), (179.5, 84.9)],
-        "lon double, lat double",
-    )
-    rows = pts.select(
-        mercator_x("lon").alias("x_col"),
-        F.expr(mercator_x_sql("lon")).alias("x_sql"),
-        mercator_y("lat").alias("y_col"),
-        F.expr(mercator_y_sql("lat")).alias("y_sql"),
-    ).collect()
-    for r in rows:
-        assert r.x_col == r.x_sql and r.y_col == r.y_sql
-
-
 def test_point_in_polygon_unrolled_matches_hof_fold(spark):
     # the plan-time-literal unrolling must agree with the HOF fold on
-    # a concave ring, on an open (unclosed) ring, and near edges
+    # a concave ring, on an open (unclosed) ring, near edges, and on
+    # an empty ring (which contains nothing)
     from utils_infra_spark.functions.geo import point_in_polygon_unrolled_sql
 
     coords = [(0, 0), (10, 0), (10, 4), (4, 4), (4, 10), (0, 10), (0, 0)]
     ring_col = F.array(*[F.struct(F.lit(float(x)).alias("x"), F.lit(float(y)).alias("y")) for x, y in coords])
+    empty_ring = F.expr("CAST(array() AS array<struct<x:double,y:double>>)")
     pts = spark.createDataFrame(
         [(5.0, 5.0), (2.0, 8.0), (8.0, 2.0), (-1.0, -1.0), (3.9, 9.9), (4.1, 9.9), (9.9, 3.9)],
         "lon double, lat double",
@@ -385,9 +350,12 @@ def test_point_in_polygon_unrolled_matches_hof_fold(spark):
         point_in_polygon(F.col("lon"), F.col("lat"), ring_col).alias("a"),
         F.expr(point_in_polygon_unrolled_sql("lon", "lat", coords)).alias("b"),
         F.expr(point_in_polygon_unrolled_sql("lon", "lat", coords[:-1])).alias("b_open"),
+        point_in_polygon(F.col("lon"), F.col("lat"), empty_ring).alias("a_empty"),
+        F.expr(point_in_polygon_unrolled_sql("lon", "lat", [])).alias("b_empty"),
     ).collect()
     for r in rows:
         assert r.a == r.b == r.b_open
+        assert r.a_empty is False and r.b_empty is False
 
 
 def test_template_round_matches_js_math_round(spark):
@@ -405,30 +373,24 @@ def test_template_round_matches_js_math_round(spark):
 
 def test_point_in_polygon_open_ring_all_variants_agree(spark):
     """An OPEN ring (no repeated first vertex) must include its
-    closing edge in every variant: HOF fold, SQL-text twin, and the
-    plan-time unrolled twin. Point (-5, 5) is OUTSIDE the open square
+    closing edge in both variants: the HOF fold and the plan-time
+    unrolled form. Point (-5, 5) is OUTSIDE the open square
     [(0,0),(10,0),(10,10),(0,10)] — without the closing (0,10)->(0,0)
     edge the even-odd count is 1 and it reads inside."""
     from pyspark.sql import functions as F
 
-    from utils_infra_spark.functions.geo import (
-        point_in_polygon,
-        point_in_polygon_sql,
-        point_in_polygon_unrolled_sql,
-        ring_sql,
-    )
+    from utils_infra_spark.functions.geo import point_in_polygon, point_in_polygon_unrolled_sql
 
     open_sq = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
     closed_sq = open_sq + [open_sq[0]]
     pts = [(-5.0, 5.0, False), (5.0, 5.0, True), (15.0, 5.0, False), (5.0, -1.0, False)]
     df = spark.createDataFrame([(x, y) for x, y, _ in pts], "x double, y double")
     for coords in (open_sq, closed_sq):
-        ring = F.expr(ring_sql(coords))
+        ring = F.array(*[F.struct(F.lit(x).alias("x"), F.lit(y).alias("y")) for x, y in coords])
         got_hof = [r[0] for r in df.select(point_in_polygon(F.col("x"), F.col("y"), ring)).collect()]
-        got_sql = [r[0] for r in df.select(F.expr(point_in_polygon_sql("x", "y", ring_sql(coords)))).collect()]
         got_unr = [r[0] for r in df.select(F.expr(point_in_polygon_unrolled_sql("x", "y", coords))).collect()]
         want = [w for _, _, w in pts]
-        assert got_hof == got_sql == got_unr == want, (coords, got_hof, got_sql, got_unr)
+        assert got_hof == got_unr == want, (coords, got_hof, got_unr)
 
 
 def test_asof_join_null_payload_field_survives(spark):

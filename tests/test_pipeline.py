@@ -268,10 +268,10 @@ def test_redact_pii_edge_cases(spark):
     assert out[5]["r"] == "combo <EMAIL> at <IP> tel <PHONE>"
 
 
-def test_shingles_sql_twin_matches_column_builder(spark):
-    from pyspark.sql import functions as F
-
-    from utils_infra_spark.pipeline.dedup import shingles_from_tokens, shingles_from_tokens_sql
+def test_shingles_from_tokens_expected_values(spark):
+    # word k-grams in token order; an array shorter than k yields one
+    # shingle of all its tokens
+    from utils_infra_spark.pipeline.dedup import shingles_from_tokens
 
     texts = [
         ("a b c d e",),
@@ -280,17 +280,36 @@ def test_shingles_sql_twin_matches_column_builder(spark):
         ("  padded   spaces  here now ",),
         ("exactly three toks",),
     ]
+    want = {
+        2: [
+            ["a b", "b c", "c d", "d e"],
+            ["one two"],
+            ["x"],
+            ["padded spaces", "spaces here", "here now"],
+            ["exactly three", "three toks"],
+        ],
+        3: [
+            ["a b c", "b c d", "c d e"],
+            ["one two"],
+            ["x"],
+            ["padded spaces here", "spaces here now"],
+            ["exactly three toks"],
+        ],
+        5: [
+            ["a b c d e"],
+            ["one two"],
+            ["x"],
+            ["padded spaces here now"],
+            ["exactly three toks"],
+        ],
+    }
     df = (
         spark.createDataFrame(texts, "text string")
         .selectExpr("text", r"split(trim(text), '\\s+') AS toks")
     )
-    for k in (2, 3, 5):
-        rows = df.select(
-            shingles_from_tokens("toks", k).alias("a"),
-            F.expr(shingles_from_tokens_sql("toks", k)).alias("b"),
-        ).collect()
-        for r in rows:
-            assert r.a == r.b, (k, r)
+    for k, expected in want.items():
+        got = {r.text: r.sh for r in df.select("text", shingles_from_tokens("toks", k).alias("sh")).collect()}
+        assert [got[t] for (t,) in texts] == expected, (k, got)
 
 
 # ----------------------------------------------------- repetition signals

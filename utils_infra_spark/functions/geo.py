@@ -29,16 +29,6 @@ def mercator_y(lat: Column | str) -> Column:
     return (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad)) / F.lit(math.pi)) / F.lit(2.0)
 
 
-def mercator_x_sql(lon: str) -> str:
-    """SQL-text twin of :func:`mercator_x` (one Py4J call via F.expr)."""
-    return f"(({lon} + 180.0D) / 360.0D)"
-
-
-def mercator_y_sql(lat: str) -> str:
-    """SQL-text twin of :func:`mercator_y` (one Py4J call via F.expr)."""
-    return f"((1.0D - ln(tan(radians({lat})) + 1.0D / cos(radians({lat}))) / {math.pi!r}D) / 2.0D)"
-
-
 def quadkey(x: Column, y: Column, z: int) -> Column:
     """Tile → quadkey string (interleaved bits), a locality-preserving
     partition key for tile tables at scale."""
@@ -123,7 +113,8 @@ def point_in_polygon(lon: Column, lat: Column, ring: Column) -> Column:
     point) and (x-intersection right of the point). Edges wrap via
     ``(i+1) % n`` so an OPEN ring gets its closing edge; on a closed
     ring the wrap edge is degenerate (identical endpoints → never
-    straddles) and contributes nothing.
+    straddles) and contributes nothing. An empty ring contains
+    nothing.
     """
     n = F.size(ring)
     idx = F.sequence(F.lit(0), n - F.lit(1))  # edge i: ring[i] → ring[(i+1) % n]
@@ -139,13 +130,8 @@ def point_in_polygon(lon: Column, lat: Column, ring: Column) -> Column:
         return F.when(straddles & (lon < x_int), 1).otherwise(0)
 
     hits = F.aggregate(idx, F.lit(0), lambda acc, i: acc + crosses(i))
-    return (hits % 2) == 1
-
-
-def ring_sql(coords: list[tuple[float, float]]) -> str:
-    """A polygon ring as a SQL literal ``array<struct<x,y>>`` string."""
-    pts = ", ".join(f"named_struct('x', {float(x)!r}D, 'y', {float(y)!r}D)" for x, y in coords)
-    return f"array({pts})"
+    # sequence(0, -1) is [0, -1], not empty: guard the empty ring
+    return F.when(n == 0, F.lit(False)).otherwise((hits % 2) == 1)
 
 
 def point_in_polygon_unrolled_sql(lon: str, lat: str, coords: list[tuple[float, float]]) -> str:
@@ -158,7 +144,8 @@ def point_in_polygon_unrolled_sql(lon: str, lat: str, coords: list[tuple[float, 
     config-driven region lists, broadcast boundary sets), the fold
     unrolls into a flat sum of per-edge CASE expressions that
     whole-stage codegen compiles like any other arithmetic. Identical
-    even-odd semantics, same results (twin-equivalence test).
+    even-odd semantics: a test checks it against the fold on concave,
+    open and empty rings.
     """
     pts = [(float(x), float(y)) for x, y in coords]
     if not pts:
@@ -175,30 +162,6 @@ def point_in_polygon_unrolled_sql(lon: str, lat: str, coords: list[tuple[float, 
     if not terms:
         return "false"
     return f"(({' + '.join(terms)}) % 2 = 1)"
-
-
-def point_in_polygon_sql(lon: str, lat: str, ring: str) -> str:
-    """SQL-text twin of :func:`point_in_polygon` — the identical
-    ray-cast fold built as ONE expression string (one Py4J round-trip
-    via ``F.expr``) instead of ~40 Column calls.
-
-    ``lon``/``lat``/``ring`` are SQL fragments substituted verbatim —
-    pass column names or literals (``ring_sql``); an expensive ring
-    expression should be aliased to an attribute first, since it
-    appears several times in the text (Catalyst constant-folds
-    literal rings either way).
-    """
-    # SQL array indexing is 0-based (element_at is the 1-based form);
-    # edges wrap via (i+1) % size so open rings get their closing edge
-    # (degenerate no-op on closed rings), matching point_in_polygon
-    xi, yi = f"{ring}[i].x", f"{ring}[i].y"
-    xj, yj = f"{ring}[(i+1) % size({ring})].x", f"{ring}[(i+1) % size({ring})].y"
-    straddles = f"(({yi} > {lat}) != ({yj} > {lat}))"
-    x_int = f"(({xj} - {xi}) * ({lat} - {yi}) / ({yj} - {yi}) + {xi})"
-    return (
-        f"((aggregate(sequence(0, size({ring}) - 1), 0, (acc, i) -> "
-        f"acc + (CASE WHEN {straddles} AND ({lon} < {x_int}) THEN 1 ELSE 0 END)) % 2) = 1)"
-    )
 
 
 def bilinear_interpolate(grid: Column, lon: Column, lat: Column, *, west: float, south: float, dlon: float, dlat: float) -> Column:

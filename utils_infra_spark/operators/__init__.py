@@ -1,3 +1,3 @@
-from . import aggregations, filters, joins, setops, windows
+from . import aggregations, filters, joins, windows
 
-__all__ = ["aggregations", "filters", "joins", "setops", "windows"]
+__all__ = ["aggregations", "filters", "joins", "windows"]

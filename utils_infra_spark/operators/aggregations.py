@@ -16,29 +16,33 @@ from pyspark.sql import functions as F
 # Money-like sums use fixed-point arithmetic so results are
 # associative: a 32-partition Spark plan and a single-threaded oracle
 # agree bit-for-bit (double sums differ in the last ulps across
-# partitionings). Implementation detail that matters at both ends of
-# the scale spectrum: the obvious `cast(decimal(28,6))` per row goes
+# partitionings). The obvious `cast(decimal(28,6))` per row goes
 # through a BigDecimal string-parse in Spark (~6x slower than double
-# sums, measured); instead we quantize with `floor(x*10^s + 0.5)` —
-# pure JVM double math that whole-stage codegen inlines — and
-# accumulate the resulting long in DECIMAL(38,0), whose compact-long
-# fast path upgrades to BigDecimal only if a partial sum actually
-# exceeds 2^63 (the graceful 100 TB behavior; a raw long sum would
-# silently wrap). Oracles mirror the exact same FLOOR expression, so
-# both engines compute identical integers and identical final doubles.
+# sums, measured); instead `fixed_point` quantizes with
+# `floor(x*10^s + 0.5)` — pure JVM double math that whole-stage codegen
+# inlines — and the sum accumulates in DECIMAL(38,0), so it stays
+# exact past 2^63, where a BIGINT sum raises ARITHMETIC_OVERFLOW under
+# ANSI. That accumulator is a BigDecimal aggregation buffer, and it is
+# not cheap: ROADMAP item 2 measured `pricing_summary` at 0.659 s warm
+# against 0.288 s with a BIGINT accumulator (sf0.1, identical values).
+# Every fixed-point money sum builds it through `fixed_point`, so a
+# cheaper exact accumulator for them is a change to that one function.
+# Oracles mirror the exact same FLOOR expression, so both engines
+# compute identical integers and identical final doubles.
 DEC = "decimal(28,6)"  # retained for per-group (post-agg) exact ratios
 
 _ACC = "decimal(38,0)"
 
 
-def _quantize(col: Column, scale: int) -> Column:
-    """floor(x*10^scale + 0.5): half-up-toward-+inf fixed-point units.
+def fixed_point(col: Column, scale: int = 6) -> Column:
+    """``floor(x*10^scale + 0.5)`` (half-up-toward-+inf fixed-point
+    units) as the DECIMAL(38,0) sum accumulator.
 
     The same expression (not just the same convention) must appear in
-    the oracle SQL — `FLOOR(x*10^s + 0.5)` — so the two engines agree
+    the oracle SQL — ``FLOOR(x*10^s + 0.5)`` — so the two engines agree
     even at rounding boundaries.
     """
-    return F.floor(col * F.lit(float(10**scale)) + F.lit(0.5))
+    return F.floor(col * F.lit(float(10**scale)) + F.lit(0.5)).cast(_ACC)
 
 
 def dsum(col: str | Column, alias: str, scale: int = 6) -> Column:
@@ -48,18 +52,7 @@ def dsum(col: str | Column, alias: str, scale: int = 6) -> Column:
     BIGINT)) AS DOUBLE)/1000000 AS alias`` (scale=6).
     """
     col = F.col(col) if isinstance(col, str) else col
-    return (F.sum(_quantize(col, scale).cast(_ACC)).cast("double") / F.lit(float(10**scale))).alias(alias)
-
-
-def dsum_sql(expr: str, alias: str, scale: int = 6) -> str:
-    """SQL-text twin of :func:`dsum` — the identical expression built
-    as ONE string (one Py4J round-trip via ``F.expr``) instead of ~8
-    Column calls. Driver-latency-sensitive builders (headline queries,
-    wide aggregate lists) use this form; semantics and generated plan
-    are the same.
-    """
-    m = float(10**scale)
-    return f"CAST(SUM(CAST(FLOOR(({expr}) * {m!r}D + 0.5D) AS {_ACC})) AS DOUBLE) / {m!r}D AS {alias}"
+    return (F.sum(fixed_point(col, scale)).cast("double") / F.lit(float(10**scale))).alias(alias)
 
 
 def davg(col: str | Column, alias: str, scale: int = 6, qscale: int = 6) -> Column:
@@ -69,7 +62,7 @@ def davg(col: str | Column, alias: str, scale: int = 6, qscale: int = 6) -> Colu
     BIGINT)) AS DOUBLE)/1000000 / COUNT(x), scale)``.
     """
     col = F.col(col) if isinstance(col, str) else col
-    total = F.sum(_quantize(col, qscale).cast(_ACC)).cast("double") / F.lit(float(10**qscale))
+    total = F.sum(fixed_point(col, qscale)).cast("double") / F.lit(float(10**qscale))
     return F.round(total / F.count(col), scale).cast("double").alias(alias)
 
 
@@ -126,8 +119,8 @@ def weighted_quantile(
     carries partial weight sums, never rows); both the cumulative and
     the total window ride the SAME hash partitioning on the group
     key, so one exchange feeds everything. Weights accumulate in
-    DECIMAL(38,0) (compact-long fast path, graceful past 2^63 — the
-    100 TB token-count case a raw BIGINT sum would silently wrap).
+    DECIMAL(38,0), exact past 2^63 — the 100 TB token-count case
+    where a BIGINT sum raises ARITHMETIC_OVERFLOW under ANSI.
     The distinct-(group, value) window assumes a BOUNDED value domain
     (quantized money, counts): when distinct ≈ rows (an unbounded
     continuous domain), a group funnels through one window task —
@@ -221,8 +214,8 @@ def weighted_quantile_bracketed(
 
     Contract shared with :func:`weighted_quantile`: NULL values and
     NULL/≤0 weights are dropped; weights accumulate in DECIMAL(38,0)
-    (compact-long fast path, graceful past 2^63). Values quantize to
-    integer micros ``floor(v*1e6 + 0.5)`` unless ``micro=True`` (the
+    (exact past 2^63). Values quantize to integer micros
+    ``floor(v*1e6 + 0.5)`` unless ``micro=True`` (the
     column already IS an integer micro quantity). Negative values bin
     by true floor division (the histogram_quantile_brackets pmod
     spell — both engines' DIV truncates toward zero).

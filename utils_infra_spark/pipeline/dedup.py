@@ -205,7 +205,7 @@ def band_key_rows_inrow(
         df.selectExpr(
             f"{id_col} AS doc_id", f"{ts_col} AS ts", rf"split(trim({text_col}), '[ \\t\\n\\x0B\\f\\r]+') AS __toks"
         )
-        .selectExpr("doc_id", "ts", f"{shingles_from_tokens_sql('__toks', k_shingle)} AS sh")
+        .select("doc_id", "ts", shingles_from_tokens("__toks", k_shingle).alias("sh"))
         .selectExpr("doc_id", "ts", "transform(sh, s -> xxhash64(s)) AS hs")
         .selectExpr(
             "doc_id",
@@ -257,19 +257,6 @@ def shingles_from_tokens(toks: Column | str, k: int = 3) -> Column:
         n >= k,
         F.transform(idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)])),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def shingles_from_tokens_sql(toks: str, k: int = 3) -> str:
-    """SQL-text twin of :func:`shingles_from_tokens` — the identical
-    expression as ONE string (one Py4J round-trip via ``F.expr``
-    instead of ~10 × k calls; see docs/SCALE.md on driver latency).
-    ``toks`` is a SQL fragment (pass an aliased attribute)."""
-    gram = ", ".join([f"element_at({toks}, i + {j})" for j in range(k)])
-    return (
-        f"CASE WHEN size({toks}) >= {k} THEN "
-        f"transform(sequence(1, greatest(size({toks}) - {k - 1}, 0)), i -> concat_ws(' ', {gram})) "
-        f"ELSE array(concat_ws(' ', {toks})) END"
-    )
 
 
 def shingles(text: Column | str, k: int = 3) -> Column:
@@ -377,8 +364,7 @@ def minhash_near_duplicates(
     )
 
     # narrow raw text; tokenize into an aliased attribute AFTER the
-    # join so only matched (candidate) rows pay it. Built from the
-    # SQL-text twin: ~6 Py4J round-trips instead of ~60.
+    # join so only matched (candidate) rows pay it.
     #
     # r14: NO spread() here — the exchange it added since r13 was a
     # 32-way round-robin shuffle of the ENTIRE corpus text that fed
@@ -390,8 +376,8 @@ def minhash_near_duplicates(
     # r14 NEGATIVE RESULT (measured, then reverted): attaching each
     # side's text with its own join — cand ⋈ raw(id_a) ⋈ raw(id_b) —
     # to delete this regroup's Sort + two SortAggregates made the
-    # query 3× SLOWER (0.67 s → 2.19 s warm at sf0.1, idle box,
-    # tools/ab_minhash_verify.py): with no aggregate in between,
+    # query 3× SLOWER (0.67 s → 2.19 s warm at sf0.1, idle box, a
+    # row-set-equal A/B): with no aggregate in between,
     # PushPredicateThroughJoin folds the final jaccard-threshold
     # filter INTO the second join's condition, substituting the whole
     # shingle pipeline (split + interpreted transform() lambdas +
@@ -409,9 +395,7 @@ def minhash_near_duplicates(
         .selectExpr(
             "id_a", "id_b", "doc_id", r"split(trim(__text), '[ \\t\\n\\x0B\\f\\r]+') AS __toks"
         )
-        .selectExpr(
-            "id_a", "id_b", "doc_id", f"{shingles_from_tokens_sql('__toks', k_shingle)} AS sh"
-        )
+        .select("id_a", "id_b", "doc_id", shingles_from_tokens("__toks", k_shingle).alias("sh"))
         .groupBy("id_a", "id_b")
         .agg(
             F.first(F.when(F.col("doc_id") == F.col("id_a"), F.col("sh")), ignorenulls=True).alias("sh_a"),
@@ -543,7 +527,7 @@ def minhash_band_keys(
     shingled = (
         spread(base.selectExpr(f"{id_col} AS doc_id", f"{text_col} AS __text"), min_bytes=0)
         .selectExpr("doc_id", r"split(trim(__text), '[ \\t\\n\\x0B\\f\\r]+') AS __toks")
-        .selectExpr("doc_id", f"{shingles_from_tokens_sql('__toks', k_shingle)} AS sh")
+        .select("doc_id", shingles_from_tokens("__toks", k_shingle).alias("sh"))
     )
     if hash_family == "md5":
         ex = shingled.select("doc_id", F.explode_outer("sh").alias("shingle"))

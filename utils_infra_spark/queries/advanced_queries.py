@@ -113,13 +113,12 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Skew-salted two-stage aggregation (§4 scale design): partials on (key, salt) then merge — must equal the plain GROUP BY exactly (decimal sums are salt-order-independent).",
 )
 def salted_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.aggregations import fixed_point
     from ..operators.skew import salted_aggregate
 
     # fixed-point quantization (same FLOOR form as the oracle) keeps
     # the salted two-stage sum exact and salt-order-independent
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "__v", F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,0)")
-    )
+    ev = load_table(spark, sf_dir, "events").withColumn("__v", fixed_point(F.col("value")))
     out = salted_aggregate(
         ev,
         ["user_id"],

@@ -14,8 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geo import (
-    mercator_x_sql,
-    mercator_y_sql,
+    mercator_x,
+    mercator_y,
     morton_key,
     morton_key_sql,
     point_in_polygon_unrolled_sql,
@@ -47,8 +47,6 @@ Z = 6  # zoom level for the tile-cover queries
     doc="Slippy-tile cover + TMS y-flip as pure arithmetic (ref create_nationalmap_mbtiles.py:15-20,104; terrain-proxy/server.js:52-60).",
 )
 def mercator_tile_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # built from the SQL-text twins (functions/geo.py::mercator_*_sql)
-    # — same expressions, ~5 Py4J round-trips instead of ~60
     li = load_table(spark, sf_dir, "lineitem")
     pts = li.selectExpr(
         "l_orderkey",
@@ -56,10 +54,10 @@ def mercator_tile_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(l_partkey % 360) - 180 + 0.5 AS lon",
         "(l_suppkey % 140) - 70 + 0.5 AS lat",
     )
-    n = float(2**Z)
-    tiles = pts.selectExpr(
-        f"CAST(FLOOR({mercator_x_sql('lon')} * {n!r}D) AS BIGINT) AS tile_x",
-        f"CAST(FLOOR({mercator_y_sql('lat')} * {n!r}D) AS BIGINT) AS tile_y",
+    n = F.lit(float(2**Z))
+    tiles = pts.select(
+        F.floor(mercator_x("lon") * n).cast("bigint").alias("tile_x"),
+        F.floor(mercator_y("lat") * n).cast("bigint").alias("tile_y"),
     )
     return (
         tiles.groupBy("tile_x", "tile_y")

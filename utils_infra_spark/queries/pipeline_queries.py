@@ -1046,6 +1046,7 @@ def token_counts_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
+    from ..operators.aggregations import dsum
     from ..operators.temporal import scalar_subquery
 
     TERMS = ["join", "scan", "filter"]
@@ -1057,11 +1058,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         dl,
         F.struct(
             F.count(F.lit(1)).alias("n"),
-            F.round(
-                (F.sum(F.floor(F.col("dl") * 1000000.0 + 0.5).cast("decimal(38,0)")).cast("double") / 1000000.0)
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avgdl"),
+            F.round(dsum("dl", "avgdl") / F.count(F.lit(1)), 6).alias("avgdl"),
         ).alias("s"),
     ).select("s.n", "s.avgdl")
     tf = (

@@ -5,11 +5,11 @@ star schema. Each query name carries its §2 operator ids.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import filters
-from ..operators.aggregations import dsum, dsum_sql, pivot_counts, ratio_pct, value_counts
+from ..operators.aggregations import dsum, pivot_counts, ratio_pct, value_counts
 from ..operators.joins import (
     anti_join,
     bloom_pruned_join,
@@ -49,29 +49,26 @@ ORDERS_NOW = "1998-01-01 00:00:00"
     doc="A1/A3/A8 composite: the flagship TPC-H-Q1-style pricing summary.",
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # aggregate list built from SQL-text twins (one Py4J round-trip
-    # per expression instead of ~8) — identical plan and values; see
-    # operators/aggregations.py::dsum_sql and docs/SCALE.md
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = "l_extendedprice * (1 - l_discount)"
-    charge = f"{disc_price} * (1 + l_tax)"
+    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    charge = disc_price * (F.lit(1) + F.col("l_tax"))
 
-    def exact_avg(expr: str, alias: str) -> str:
-        total = f"CAST(SUM(CAST(FLOOR(({expr}) * 1000000.0D + 0.5D) AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0D"
-        return f"ROUND({total} / COUNT(1), 4) AS {alias}"
+    def row_avg(col: str, alias: str) -> Column:
+        # the oracle divides by COUNT(*), where davg counts non-null values
+        return F.round(dsum(col, alias) / F.count(F.lit(1)), 4).alias(alias)
 
     return (
         li.where("l_shipdate <= TIMESTAMP '1998-09-02'")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.expr(dsum_sql("l_quantity", "sum_qty")),
-            F.expr(dsum_sql("l_extendedprice", "sum_base_price")),
-            F.expr(dsum_sql(disc_price, "sum_disc_price")),
-            F.expr(dsum_sql(charge, "sum_charge")),
-            F.expr(exact_avg("l_quantity", "avg_qty")),
-            F.expr(exact_avg("l_extendedprice", "avg_price")),
-            F.expr(exact_avg("l_discount", "avg_disc")),
-            F.expr("COUNT(1) AS count_order"),
+            dsum("l_quantity", "sum_qty"),
+            dsum("l_extendedprice", "sum_base_price"),
+            dsum(disc_price, "sum_disc_price"),
+            dsum(charge, "sum_charge"),
+            row_avg("l_quantity", "avg_qty"),
+            row_avg("l_extendedprice", "avg_price"),
+            row_avg("l_discount", "avg_disc"),
+            F.count(F.lit(1)).alias("count_order"),
         )
     )
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregations import dsum
+from ..operators.aggregations import dsum, fixed_point
 from ..operators.joins import literal_lookup_maps
 
 from ..sources import load_table
@@ -402,12 +402,9 @@ def brand_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     # fixed-point quantized revenue: the 10^6 scale cancels in the
     # ratio, so numerator/denominator stay exact integer sums
-    rev_q = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * F.lit(1e6) + F.lit(0.5)).cast(
-        "decimal(38,0)"
-    )
-    zero = F.lit(0).cast("decimal(38,0)")
+    rev_q = fixed_point(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     joined = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-    branded = F.when(F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3"), rev_q).otherwise(zero)
+    branded = F.when(F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3"), rev_q).otherwise(F.lit(0))
     return joined.agg(
         F.round(F.sum(branded).cast("double") * 100 / F.sum(rev_q).cast("double"), 4).alias("brand_share_pct"),
         F.count(F.lit(1)).alias("n"),

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import fixed_point
 from ..operators.filters import coordinate_valid
 from ..operators.windows import last_non_null_per_key
 from ..sources import load_table
@@ -64,10 +65,7 @@ def rolling_1h_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ep")
         .rangeBetween(-3_600_000_000, Window.currentRow)
     )
-    rolling = (
-        (F.sum(F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,0)")).over(w))
-        .cast("double") / F.lit(1e6)
-    ).alias("rolling_value_1h")
+    rolling = (F.sum(fixed_point(F.col("value"))).over(w).cast("double") / F.lit(1e6)).alias("rolling_value_1h")
     return ev.select("user_id", "ep", rolling)
 
 
