@@ -53,55 +53,20 @@ def test_empty_dir_is_noop(spark, tmp_path):
     _restore(spark)
 
 
-def test_registry_surfaces_unproven_names_first():
-    """The external runner verifies the FIRST 50 registry entries in
-    insertion order (observed every round). The reorder in
-    queries.__init__ must therefore survive module-import-order
-    changes: the registry head must follow _SAMPLING_PRIORITY exactly,
-    and every priority name present must be oracle-backed or
-    explicitly rows-only by design."""
-    from utils_infra_spark.queries import _SAMPLING_PRIORITY, REGISTRY, _load
+def test_registry_index_is_current():
+    """REGISTRY.json is the committed operator index: it must equal
+    what tools/gen_registry_index.py builds from the live registry, so
+    a new, renamed or untagged query fails here instead of leaving the
+    file stale (build_index raises on a query with no operator tag)."""
+    import json
+    import os
 
-    _load()
-    from utils_infra_spark.queries import DRIVER_SAMPLE_WINDOW
+    from tools import gen_registry_index
 
-    names = list(REGISTRY)
-    expected_head = [n for n in _SAMPLING_PRIORITY if n in REGISTRY]
-    assert names[: len(expected_head)] == expected_head
-    # the priority list IS the driver's sample: an entry past the
-    # window is silently never proven (happened twice in r7 drafts —
-    # pin the exact size so growth forces an explicit trim decision)
-    assert len(expected_head) == DRIVER_SAMPLE_WINDOW, len(expected_head)
-    # the reorder must never drop or duplicate entries
-    assert len(names) == len(set(names))
-    # every callable still resolves (no dangling priority names)
-    assert all(REGISTRY[n].fn is not None for n in expected_head)
-    # r13 goal: every query whose CODE changed in r13 (char_lm fit
-    # restructure, union_distinct single-scan plan) and the entire
-    # r9-proven cohort — the oldest surviving proofs — must sit
-    # INSIDE the window, so after this round no oracle-backed query's
-    # latest proof predates r10
-    window = set(names[:DRIVER_SAMPLE_WINDOW])
-    assert {
-        # r13 code changes
-        "char_lm_quality_documents",
-        "union_distinct_orders",
-        # r9 cohort (oldest proofs) — spot names; the full 29 are in
-        # _SAMPLING_PRIORITY section (2)
-        "event_interarrival",
-        "pagerank_user_type_graph",
-        "triangle_count_copurchase",
-        "langid_trigram_documents",
-        "mad_outliers_events",
-        "interval_coalesce_user_activity",
-        "template_render",
-        "pricing_summary",
-    } <= window
-    # everything in the window is drawable hash evidence this round:
-    # oracle-backed only (ccnet_buckets_approx — rows-only by design —
-    # got its designed weaker check in r8 and is deliberately outside)
-    for n in names[:DRIVER_SAMPLE_WINDOW]:
-        assert REGISTRY[n].oracle is not None, n
+    path = os.path.join(gen_registry_index.REPO, "REGISTRY.json")
+    with open(path) as f:
+        committed = json.load(f)
+    assert gen_registry_index.build_index() == committed
 
 
 def test_checkpoint_with_ids_attributes_exactly_its_own_rdd(spark):

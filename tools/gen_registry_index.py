@@ -1,22 +1,20 @@
 """Emit REGISTRY.json — a self-describing index of the named-query
-registry so coverage accounting (the SURVEY §2 operator table, the
-driver's first-50 sampling window, the proven/unproven split) is
-machine-checkable instead of hand-maintained.
+registry, so the SURVEY §2 operator coverage is machine-checkable
+instead of hand-maintained.
 
-Per query: sampling position, defining module, oracle-backed flag,
-SURVEY §2 operator ids it evidences (OPERATOR_IDS map below), the
-rounds whose driver CORRECTNESS snapshot proved it (hash-green, or
-ran-with-rows for rows-only queries), and the first doc line.
+Per query: defining module, oracle-backed flag, the SURVEY §2 operator
+ids it evidences (OPERATOR_IDS map below) and the first doc line.
+`build_index()` returns the payload and fails if a query has no tag;
+`tests/test_session.py::test_registry_index_is_current` checks that the
+committed file equals it.
 
 Run from the repo root:  python tools/gen_registry_index.py
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -25,10 +23,9 @@ sys.path.insert(0, REPO)
 # query name -> SURVEY.md §2 operator ids (+ pipeline-op tags) it
 # evidences. Kept here — next to the artifact generator — rather than
 # in the decorators so the frozen registry modules stay untouched.
-# r13: every registered query must carry >= 1 tag (the generator
-# fails if one doesn't), so the operator<->query map is fully
-# machine-readable — COVERAGE.md prose is commentary, this is the
-# index.
+# Every registered query must carry >= 1 tag (build_index fails if
+# one doesn't), so the operator<->query map is fully machine-readable
+# — COVERAGE.md prose is commentary, this is the index.
 #
 # Tag vocabulary:
 #   S*/K*/F*/J*/A*/W*/O*/R*/T* — SURVEY.md §2 operator ids.
@@ -195,7 +192,6 @@ OPERATOR_IDS: dict[str, list[str]] = {
     "cube_event_type_hour": ["agg-cube"],
     "grouping_sets_segment_priority": ["agg-grouping-sets"],
     "percentile_quantities": ["agg-percentile"],
-    # --- r13: the 52 names the r12 verdict flagged as ops: [] ---
     "weighted_median_bracket_price_by_flag": ["agg-weighted-quantile"],
     "sorted_neighborhood_part_pairs": ["er-blocking-snm"],
     "entity_resolution_parts": ["er-resolution"],
@@ -251,89 +247,40 @@ OPERATOR_IDS: dict[str, list[str]] = {
 }
 
 
-def proven_rounds() -> dict[str, list[int]]:
-    out: dict[str, list[int]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        with open(path) as f:
-            snap = json.load(f)
-        for name, res in snap.items():
-            ok = bool(res.get("hash_match")) or (
-                res.get("err") == "no_oracle" and res.get("spark_rows") is not None
-            )
-            if ok:
-                out.setdefault(name, []).append(rnd)
-    return out
-
-
-def print_next_priority() -> None:
-    """Print the recommended next-round _SAMPLING_PRIORITY literal:
-    every still-unproven oracle-backed name (current relative order)
-    first, then unproven rows-only names — paste into
-    queries/__init__.py after each round's CORRECTNESS snapshot
-    lands, so the driver's first-50 window always holds fresh names."""
+def build_index() -> dict:
     from utils_infra_spark.queries import REGISTRY, _load
 
     _load()
-    proven = proven_rounds()
-    unproven = [n for n in REGISTRY if n not in proven]
-    oracle_first = [n for n in unproven if REGISTRY[n].oracle is not None] + [
-        n for n in unproven if REGISTRY[n].oracle is None
-    ]
-    print("_SAMPLING_PRIORITY = [")
-    for n in oracle_first:
-        tag = "" if REGISTRY[n].oracle is not None else "  # rows-only"
-        print(f'    "{n}",{tag}')
-    print("]")
-    print(f"# {len(oracle_first)} unproven ({sum(1 for n in oracle_first if REGISTRY[n].oracle)} oracle-backed)")
-
-
-def main() -> None:
-    from utils_infra_spark.queries import DRIVER_SAMPLE_WINDOW, REGISTRY, _load
-
-    _load()
-    proven = proven_rounds()
-    index = {}
     untagged = [n for n in REGISTRY if not OPERATOR_IDS.get(n)]
     if untagged:
         raise SystemExit(
             f"every registered query needs >= 1 op tag in OPERATOR_IDS; missing: {untagged}"
         )
-    for pos, (name, q) in enumerate(REGISTRY.items()):
-        index[name] = {
-            "position": pos,
-            "in_driver_sample_window": pos < DRIVER_SAMPLE_WINDOW,
+    index = {
+        name: {
             "module": q.fn.__module__.rsplit(".", 1)[-1],
             "oracle_backed": q.oracle is not None,
             "ops": OPERATOR_IDS[name],
-            "proven_rounds": proven.get(name, []),
             "doc": (q.doc or "").strip().splitlines()[0] if (q.doc or "").strip() else "",
         }
-    payload = {
+        for name, q in REGISTRY.items()
+    }
+    return {
         "total": len(index),
         "oracle_backed": sum(1 for v in index.values() if v["oracle_backed"]),
         "rows_only": sum(1 for v in index.values() if not v["oracle_backed"]),
-        "driver_proven_unique": sum(1 for v in index.values() if v["proven_rounds"]),
-        "never_proven": sorted(n for n, v in index.items() if not v["proven_rounds"]),
         "queries": index,
     }
+
+
+def main() -> None:
+    payload = build_index()
     out_path = os.path.join(REPO, "REGISTRY.json")
     with open(out_path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=False)
         f.write("\n")
-    print(
-        f"wrote {out_path}: {payload['total']} queries, "
-        f"{payload['oracle_backed']} oracle-backed, "
-        f"{payload['driver_proven_unique']} driver-proven, "
-        f"{len(payload['never_proven'])} never proven"
-    )
+    print(f"wrote {out_path}: {payload['total']} queries, {payload['oracle_backed']} oracle-backed")
 
 
 if __name__ == "__main__":
-    if "--priority" in sys.argv:
-        print_next_priority()
-    else:
-        main()
+    main()

@@ -366,10 +366,9 @@ def minhash_near_duplicates(
     # narrow raw text; tokenize into an aliased attribute AFTER the
     # join so only matched (candidate) rows pay it.
     #
-    # r14: NO spread() here — the exchange it added since r13 was a
-    # 32-way round-robin shuffle of the ENTIRE corpus text that fed
-    # straight into a BroadcastExchange (plan nodes 32→33 in
-    # plans/r13/minhash_..._after.txt): raw does no per-row compute
+    # NO spread() here — the exchange it added was a 32-way (on 32
+    # cores) round-robin shuffle of the ENTIRE corpus text that fed
+    # straight into a BroadcastExchange: raw does no per-row compute
     # before the join (shingles are post-join), so the exchange
     # bought nothing and cost a full corpus shuffle per run.
     #

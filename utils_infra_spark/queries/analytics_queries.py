@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.datetimes import epoch_micros
-from ..operators.aggregations import davg, dsum
+from ..operators.aggregations import davg, dsum, fixed_point
 from ..operators.temporal import asof_backward_join, range_join_binned, scalar_subquery
 from ..sources import load_table
 from . import register
@@ -444,9 +444,8 @@ def event_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corr_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    acc = "decimal(38,0)"
-    x = F.floor(F.col("l_quantity") + F.lit(0.5)).cast(acc)
-    y = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(acc)
+    x = fixed_point(F.col("l_quantity"), 0)
+    y = fixed_point(F.col("l_extendedprice"), 2)
     q = li.select("l_returnflag", x.alias("x"), y.alias("y"))
     s = q.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
