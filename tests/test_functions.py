@@ -21,6 +21,7 @@ from utils_infra_spark.functions.strings import (
     sanitize_log,
     zero_pad,
 )
+from utils_infra_spark.operators.aggregations import fixed_point
 from utils_infra_spark.operators.filters import ci_contains_any_element
 from utils_infra_spark.operators.joins import upsert_latest
 from utils_infra_spark.plans.styling import apply_style_rules
@@ -52,6 +53,21 @@ def test_sanitize_log_strips_control_chars(spark):
 def test_degree_distance(spark):
     v = one(spark, degree_distance(F.lit(-41.0), F.lit(174.0), F.lit(-44.0), F.lit(178.0)))
     assert v == pytest.approx(5.0)
+
+
+def test_fixed_point_scale_zero_adds_no_multiply(spark):
+    """At scale 0 the quantize step is floor(x + 0.5) alone: no
+    ``* 1.0`` survives into the optimized plan, and halves round up
+    toward +inf (-2.5 -> -2)."""
+    import math
+
+    xs = [2.5, -2.5, 0.5, -0.5, 0.0, 1.4, -1.6, 7.0]
+    df = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        "x", fixed_point(F.col("x"), 0).alias("q")
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "* 1.0" not in plan, plan
+    assert {(r.x, int(r.q)) for r in df.collect()} == {(x, math.floor(x + 0.5)) for x in xs}
 
 
 def test_ci_contains_any_element(spark):

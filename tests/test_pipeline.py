@@ -380,10 +380,11 @@ def test_top_ngram_stats_partition_independent(spark):
 def test_rolling_fingerprint_empty_doc_is_null(spark):
     """A blank document must yield a NULL fingerprint, not crash the
     job (element_at index 0)."""
-    from utils_infra_spark.pipeline.text import rolling_fingerprint
+    from utils_infra_spark.pipeline.text import rolling_fingerprint_from_tokens, tokens
 
     df = spark.createDataFrame([(1, "alpha beta gamma delta"), (2, ""), (3, "   ")], "id int, text string")
-    out = {r.id: r.fp for r in df.select("id", rolling_fingerprint("text").alias("fp")).collect()}
+    toks = df.select("id", tokens("text").alias("toks"))
+    out = {r.id: r.fp for r in toks.select("id", rolling_fingerprint_from_tokens("toks").alias("fp")).collect()}
     assert out[1] is not None and out[2] is None and out[3] is None
 
 

@@ -8,6 +8,7 @@ repartitioning, reconstruction round-trips).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from utils_infra_spark.pipeline.sampling import (
@@ -184,6 +185,42 @@ def test_salted_join_row_identical_and_spreads_hot_key(spark):
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(8))
     n_buckets = fact.where(F.col("k") == 7).select(salt.alias("s")).distinct().count()
     assert n_buckets >= 6
+
+
+# Hot-key fixture: one user (a bot or service account) remapped onto
+# ~10% of ALL events, the textbook skew that salting exists for.
+HOT_USER = 424242
+
+
+@pytest.fixture(scope="module")
+def skewed_sf_dir(spark, sf_dir, tmp_path_factory):
+    from utils_infra_spark.sources.tables import load_table
+
+    out = tmp_path_factory.mktemp("skewed_sf")
+    ev = load_table(spark, sf_dir, "events")
+    skewed = ev.withColumn(
+        "user_id",
+        F.when(F.pmod("event_id", F.lit(10)) == 0, F.lit(HOT_USER)).otherwise(F.col("user_id")),
+    )
+    skewed.write.parquet(str(out / "events.parquet"))
+    return str(out)
+
+
+def test_salt_spreads_hot_key_across_partials(spark, skewed_sf_dir):
+    """The hot key's rows must land in >= salt_buckets/2 distinct
+    partial groups — measured with the operator's OWN salt expression
+    (operators/skew.py salt_column), on a (user_id, ts) projection."""
+    from utils_infra_spark.operators.skew import salt_column
+    from utils_infra_spark.sources.tables import load_table
+
+    buckets = 8
+    ev = load_table(spark, skewed_sf_dir, "events")
+    hot = ev.where(F.col("user_id") == HOT_USER).select("user_id", "ts")
+    assert hot.count() >= 100  # the fixture really made a hot key (~10% of events)
+    n_partials = (
+        hot.withColumn("__salt", salt_column(hot, buckets)).select("__salt").distinct().count()
+    )
+    assert n_partials >= buckets // 2, f"hot key spread over only {n_partials}/{buckets} partials"
 
 
 def test_weighted_sample_monotone_and_stable(spark):

@@ -113,3 +113,37 @@ def test_spread_memo_records_and_reuses_decision(spark):
     assert out1.rdd.getNumPartitions() == out2.rdd.getNumPartitions()
     spread(mk(), partitions=2, min_bytes=0)
     assert len(per) == n_before + 1  # different target -> its own entry
+
+
+def test_library_env_vars_are_deployment_only():
+    """The library reads only the three deployment env vars (core
+    count, master URL, driver heap). Any other behaviour is an
+    argument or a Spark conf, not a hidden process-wide knob."""
+    import ast
+    from pathlib import Path
+
+    import utils_infra_spark
+
+    def is_environ(node):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    def key(node):
+        return node.value if isinstance(node, ast.Constant) else ast.unparse(node)
+
+    keys = set()
+    for path in Path(utils_infra_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Subscript) and is_environ(node.value):
+                keys.add(key(node.slice))
+            elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.args:
+                f = node.func
+                if (f.attr == "get" and is_environ(f.value)) or (
+                    f.attr == "getenv" and isinstance(f.value, ast.Name) and f.value.id == "os"
+                ):
+                    keys.add(key(node.args[0]))
+    assert keys == {"SPARK_GRAFT_CPUS", "SPARK_MASTER", "SPARK_DRIVER_MEMORY"}

@@ -42,7 +42,8 @@ def fixed_point(col: Column, scale: int = 6) -> Column:
     the oracle SQL — ``FLOOR(x*10^s + 0.5)`` — so the two engines agree
     even at rounding boundaries.
     """
-    return F.floor(col * F.lit(float(10**scale)) + F.lit(0.5)).cast(_ACC)
+    scaled = col * F.lit(float(10**scale)) if scale else col
+    return F.floor(scaled + F.lit(0.5)).cast(_ACC)
 
 
 def dsum(col: str | Column, alias: str, scale: int = 6) -> Column:

@@ -21,9 +21,10 @@ def salt_column(df: DataFrame, salt_buckets: int) -> Column:
     a suspected hot key with the exact expression the operator uses —
     a hand-copied salt in a test would silently drift.
 
-    Sizing guidance (measured on the skew fixture in
-    tests/test_analytics_salted.py — one user remapped onto ~10% of
-    all events): with salt_buckets=8 the hot key's rows land in all 8
+    Sizing guidance (measured by
+    tests/test_sampling.py::test_salt_spreads_hot_key_across_partials
+    on its skew fixture — one user remapped onto ~10% of all events):
+    with salt_buckets=8 the hot key's rows land in all 8
     partial groups, i.e. rows with ANY per-row variation (a timestamp,
     an event id) spread uniformly, and the largest task shrinks from
     ~hot-share to ~hot-share/salt_buckets. The only degenerate case is

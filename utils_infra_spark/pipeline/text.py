@@ -140,13 +140,6 @@ def rolling_fingerprint_from_tokens(toks: Column | str, window: int = 8) -> Colu
     return F.when(n > 0, F.array_min(win_hash)).otherwise(F.lit(None).cast("bigint"))
 
 
-def rolling_fingerprint(text: Column | str, window: int = 8) -> Column:
-    """Winnowing-style document fingerprint: min rolling hash over
-    token windows — robust to local edits, built from HOFs only.
-    Convenience form; hot paths should use the _from_tokens variant."""
-    return rolling_fingerprint_from_tokens(tokens(text), window)
-
-
 # PII scrubbing patterns. Deliberately restricted to syntax with
 # identical semantics in Java regex (Spark, JVM-side regexp_replace)
 # and RE2 (the DuckDB oracle): character classes, bounded repetition,

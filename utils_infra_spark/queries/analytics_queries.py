@@ -761,35 +761,9 @@ def quality_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lean passes rather than one sessionization of everything.",
 )
 def purchase_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _purchase_funnel(spark, sf_dir, salt_buckets=None)
-
-
-def purchase_funnel_salted(spark: SparkSession, sf_dir: str, salt_buckets: int = 32) -> DataFrame:
-    """Skew-proof funnel twin: every per-stage ``MIN(ts) GROUP BY
-    user_id`` runs through :func:`operators.skew.salted_aggregate`
-    (partial mins on (user_id, salt), merged on user_id). Use when a
-    hot key is plausible — the threshold that matters at 100 TB is one
-    user's share of a stage exceeding ~1/shuffle-partitions of its
-    events (a bot/service account), which stalls the stage on one
-    task; salting caps any task at ~hot_key/salt_buckets. Row-identical
-    to :func:`purchase_funnel` (MIN distributes over the salt split) —
-    pinned by tests/test_analytics_salted.py."""
-    return _purchase_funnel(spark, sf_dir, salt_buckets=salt_buckets)
-
-
-def _purchase_funnel(spark: SparkSession, sf_dir: str, salt_buckets: int | None) -> DataFrame:
-    from ..operators.skew import salted_aggregate
-
     ev = load_table(spark, sf_dir, "events")
 
     def first_ts(df: DataFrame, out: str) -> DataFrame:
-        if salt_buckets:
-            return salted_aggregate(
-                df.select("user_id", "ts"),
-                ["user_id"],
-                {out: ("min", "ts")},
-                salt_buckets=salt_buckets,
-            )
         return df.groupBy("user_id").agg(F.expr(f"MIN(ts) AS {out}"))
 
     v = first_ts(ev.where("event_type = 'view'"), "t1")
@@ -855,32 +829,12 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "relative to activity and broadcasts at scale.",
 )
 def weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _weekly_retention(spark, sf_dir, salt_buckets=None)
-
-
-def weekly_retention_salted(spark: SparkSession, sf_dir: str, salt_buckets: int = 32) -> DataFrame:
-    """Skew-proof retention twin: the per-user ``MIN(w)`` cohort
-    aggregate salts (a bot user's rows spread over ``salt_buckets``
-    partial groups — same threshold note as purchase_funnel_salted).
-    The final COUNT(DISTINCT user_id) needs no salting: Spark already
-    plans distinct as a two-stage expand keyed on (group, user_id),
-    so the hot USER adds one row per (cohort, offset), not one task's
-    worth of work. Row-identical to :func:`weekly_retention`."""
-    return _weekly_retention(spark, sf_dir, salt_buckets=salt_buckets)
-
-
-def _weekly_retention(spark: SparkSession, sf_dir: str, salt_buckets: int | None) -> DataFrame:
-    from ..operators.skew import salted_aggregate
-
     ev = load_table(spark, sf_dir, "events")
     wk = ev.selectExpr(
         "user_id",
         "CAST(FLOOR(datediff(CAST(ts AS DATE), DATE '2024-01-01') / 7) AS BIGINT) AS w",
     )
-    if salt_buckets:
-        coh = salted_aggregate(wk, ["user_id"], {"cohort": ("min", "w")}, salt_buckets=salt_buckets)
-    else:
-        coh = wk.groupBy("user_id").agg(F.expr("MIN(w) AS cohort"))
+    coh = wk.groupBy("user_id").agg(F.expr("MIN(w) AS cohort"))
     return (
         wk.join(coh, "user_id")
         .selectExpr("user_id", "cohort", "CAST(w - cohort AS BIGINT) AS offset_w")

@@ -105,15 +105,7 @@ def get_spark(app_name: str = "utils-infra-spark", cpus: int | None = None) -> S
         # 32 concurrent tasks + accumulated broadcasts (GC thrash at
         # 8g showed up as 10x query-time variance in long sessions)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        # UI off by default (saves ~50 MB + a jetty thread per
-        # session); SPARK_GRAFT_UI flips it on for the stage-timeline
-        # profilers (tools/profile_topk_timeline.py), which read the
-        # /api/v1 REST endpoint. Normalized to a strict boolean string
-        # (r13, on advice): any truthy spelling ("1"/"yes"/"TRUE")
-        # passed verbatim made every get_spark() fail at session build
-        .config(
-            "spark.ui.enabled",
-            str(os.environ.get("SPARK_GRAFT_UI", "").strip().lower() in ("true", "1", "yes")).lower(),
-        )
+        # UI off: it costs ~50 MB + a jetty thread per session
+        .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -314,11 +314,6 @@ def uncache_base_tables(spark: SparkSession) -> None:
         per.clear()
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read all star-schema tables into a dict keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def spread(df: DataFrame, partitions: int | None = None, min_bytes: int | None = None) -> DataFrame:
     """Round-robin repartition before CPU-heavy per-row compute.
 
