@@ -608,6 +608,34 @@ def test_uncache_frees_block_manager_copies(spark, sf_dir):
     assert _persistent_rdd_ids(spark) - base == set()
 
 
+def test_recache_after_uncache_serves_fresh_plan(spark, sf_dir):
+    """A cached-mode prepared plan reads the input copies' checkpoint
+    blocks, so uncache_base_tables must drop it with them: after a
+    re-cache the same call has to build over the new copies, not
+    re-serve a plan whose blocks are gone."""
+    from utils_infra_spark.sources.tables import (
+        cache_base_tables,
+        set_input_mode,
+        uncache_base_tables,
+    )
+
+    q = REGISTRY["pricing_summary"]
+    want = q.fn(spark, sf_dir).toPandas()
+    cols = list(want.columns)
+    want = want.sort_values(cols).reset_index(drop=True)
+    try:
+        for _ in range(2):
+            cache_base_tables(spark, sf_dir, partitions=2, bytes_per_split=1)
+            set_input_mode("cached")
+            got = q.plan(spark, sf_dir).select("*").toPandas()
+            set_input_mode("parquet")
+            uncache_base_tables(spark)
+            assert got.sort_values(cols).reset_index(drop=True).equals(want)
+    finally:
+        set_input_mode("parquet")
+        uncache_base_tables(spark)
+
+
 def test_md5_band_keys_twin_shuffles_sketches_not_text(spark, sf_dir):
     """The md5 LSH twin must keep the production sketch plan shape:
     map-side-combined MIN partials, a doc_id exchange that carries the

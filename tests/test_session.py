@@ -99,13 +99,14 @@ def test_spread_memo_records_and_reuses_decision(spark):
     (semanticHash, partitions, min_bytes). Two semantically identical
     FRESH DataFrames must share one memo entry and get the same
     decision; a different partitions target is a separate entry."""
-    from utils_infra_spark.sources.tables import _SPREAD_MEMO, spread
+    from utils_infra_spark.session import session_slot
+    from utils_infra_spark.sources.tables import spread
 
     def mk():
         return spark.range(100).selectExpr("id", "id * 2 AS v")
 
     out1 = spread(mk(), partitions=4, min_bytes=0)
-    per = _SPREAD_MEMO.get(spark)
+    per = session_slot(spark, "spread")
     assert per is not None and len(per) >= 1
     n_before = len(per)
     out2 = spread(mk(), partitions=4, min_bytes=0)
@@ -113,6 +114,57 @@ def test_spread_memo_records_and_reuses_decision(spark):
     assert out1.rdd.getNumPartitions() == out2.rdd.getNumPartitions()
     spread(mk(), partitions=2, min_bytes=0)
     assert len(per) == n_before + 1  # different target -> its own entry
+
+
+def test_session_slot_prunes_stopped_sessions(spark):
+    """session_slot drops every slot of a session whose SparkContext
+    is stopped on the next access, and leaves live sessions alone."""
+    from types import SimpleNamespace
+
+    from utils_infra_spark import session
+
+    class StoppedSession:
+        _sc = SimpleNamespace(_jsc=None)
+
+    def snapshot(sess):
+        return {name: dict(slot) for name, slot in session._SESSION_STATE[sess].items()}
+
+    session.session_slot(spark, "prune_probe")["k"] = "live"
+    live_before = snapshot(spark)
+    fake = StoppedSession()
+    for name in ("plans", "tables", "input", "spread"):
+        session.session_slot(fake, name)["k"] = name
+    assert set(snapshot(fake)) == {"plans", "tables", "input", "spread"}
+
+    assert session.session_slot(spark, "prune_probe") == {"k": "live"}
+    assert fake not in session._SESSION_STATE
+    assert snapshot(spark) == live_before
+    session._SESSION_STATE[spark].pop("prune_probe")
+
+
+def test_one_owner_for_session_state():
+    """Session-scoped state has one owner: only session.py declares a
+    module-level WeakKeyDictionary, and the only module globals the
+    library rebinds are the input mode and the registry's load flag."""
+    import ast
+    from pathlib import Path
+
+    import utils_infra_spark
+
+    root = Path(utils_infra_spark.__file__).parent
+    weak_tables, rebound = set(), set()
+    for path in root.rglob("*.py"):
+        mod = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+                if "WeakKeyDictionary" in ast.unparse(node.value):
+                    weak_tables.add(mod)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Global):
+                rebound.update((mod, name) for name in node.names)
+    assert weak_tables == {"session.py"}
+    assert rebound == {("sources/tables.py", "_input_mode"), ("queries/__init__.py", "_loaded")}
 
 
 def test_library_env_vars_are_deployment_only():

@@ -8,15 +8,10 @@ scan, no Python in the loop.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# session -> the char-LM build's persisted normalized-docs scan; each
-# new build unpersists its predecessor (leak bound + the honesty pin —
-# see char_trigram_lm_scores)
-_TRIS_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+from ..session import session_slot
 
 
 def _sql_escape(s: str) -> str:
@@ -35,10 +30,6 @@ def _sql_escape(s: str) -> str:
         else:
             out.append(ch)
     return "".join(out)
-
-# session -> the DSIR build's persisted (doc, target, bucket) token
-# stream; same per-build unpersist discipline as _TRIS_CACHE
-_DSIR_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 # THE whitespace contract, spelled explicitly so both engines read the
 # same set: Java \s == [ \t\n\x0B\f\r] but RE2/DuckDB \s excludes
@@ -405,7 +396,7 @@ def char_trigram_lm_scores(df, text_col: str, id_col: str, *, add_k: float = 0.5
 
     from pyspark import StorageLevel
 
-    from ..sources.tables import prune_stopped_sessions, spread
+    from ..sources.tables import spread
 
     # CPU-heavy per-row work (len(t) trigram substrings per doc) on a
     # small-but-hot input: round-robin the NARROW RAW rows across
@@ -427,11 +418,7 @@ def char_trigram_lm_scores(df, text_col: str, id_col: str, *, add_k: float = 0.5
     # the parquet vs block-manager-cached input variants (different
     # analyzed plans), so a mode flip can never be served the wrong
     # scan; stale-key fragments are evicted (and unpersisted) on miss.
-    sess = df.sparkSession
-    prune_stopped_sessions(_TRIS_CACHE)
-    per = _TRIS_CACHE.get(sess)
-    if per is None:
-        per = _TRIS_CACHE[sess] = {}
+    per = session_slot(df.sparkSession, "char_lm")
     try:
         frag_key = (df._jdf.queryExecution().analyzed().semanticHash(), text_col, id_col)
     except Exception:
@@ -1073,18 +1060,15 @@ def dsir_importance_scores(df, text_col: str, id_col: str, *, target_sql: str = 
     # blocks via CacheManager plan-equality matching.
     from pyspark import StorageLevel
 
-    from ..sources.tables import prune_stopped_sessions
-
-    sess = tok.sparkSession
-    prune_stopped_sessions(_DSIR_CACHE)
-    prev = _DSIR_CACHE.pop(sess, None)
+    per = session_slot(tok.sparkSession, "dsir")
+    prev = per.pop("tok", None)
     if prev is not None:
         try:
             prev.unpersist(blocking=True)
         except Exception:
             pass
     tok = tok.persist(StorageLevel.MEMORY_AND_DISK)
-    _DSIR_CACHE[sess] = tok
+    per["tok"] = tok
     # FIT: one corpus pass over a bounded key space; the model comes
     # to the driver (<= n_buckets rows — small-by-contract) where the
     # log-ratios are quantized with glibc ln and sent back broadcast

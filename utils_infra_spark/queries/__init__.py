@@ -16,35 +16,27 @@ cast to bigint to match DuckDB's default integer width.
 from __future__ import annotations
 
 import os
-import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from utils_infra_spark.session import is_tiny_input, session_slot
 from utils_infra_spark.sources.tables import input_mode as tables_input_mode
 
 
-# Prepared-plan cache: session -> {(sf_dir, input mode, tiny-input
-# measurement, query name) -> DataFrame}. A DataFrame is an immutable
+# Prepared plans live in the session's "plans" slot
+# (utils_infra_spark.session): (sf_dir, input mode, tiny-input
+# measurement, query name) -> DataFrame. A DataFrame is an immutable
 # logical plan, so re-serving the same object for the same key is
 # semantically a no-op — it skips only the driver-side plan
 # RE-construction (Python → JVM expression building, ~0.05-0.5 s per
 # query under Py4J latency; see docs/SCALE.md). The same idea as
 # load_table's table cache, one level up: any engine that fields
 # repeated named queries keeps a prepared-plan cache keyed by query
-# identity. Keyed on the session OBJECT (not applicationId —
-# spark.newSession() siblings share an appId but not confs/temp
-# views, and a dict keyed by appId would cross-serve them); weak keys
-# plus prune_stopped_sessions on access bound the cache to live
-# sessions (weak keys alone can't — a cached DataFrame strongly
-# references its session). The input mode and tiny measurement are
-# part of the key because they bind the same query name to different
-# scans / physical hints (sources/tables.py, session.py).
-# Constraint (documented, not checked): data under sf_dir is
-# immutable for the session's lifetime — a cached plan pins the file
-# listing captured at first build.
-_PLAN_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# identity. The input mode and tiny measurement are part of the key
+# because they bind the same query name to different scans / physical
+# hints (sources/tables.py, session.py).
 
 
 @dataclass
@@ -63,15 +55,9 @@ class Query:
 
     def plan(self, spark: SparkSession, sf_dir: str) -> DataFrame:
         """Build (or re-serve) this query's DataFrame via the plan cache."""
-        from utils_infra_spark.session import is_tiny_input
-        from utils_infra_spark.sources.tables import prune_stopped_sessions
-
         if not self.cache_plan:
             return self.fn(spark, sf_dir)
-        prune_stopped_sessions(_PLAN_CACHE)
-        per = _PLAN_CACHE.get(spark)
-        if per is None:
-            per = _PLAN_CACHE[spark] = {}
+        per = session_slot(spark, "plans")
         # the tiny-input measurement is part of the key: builders bake
         # size-gated physical hints into the plan (e.g. the top-10
         # shuffled-hash hint), so a plan built before tune_for_input

@@ -1,14 +1,34 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and the one
+owner of session-scoped state.
 
 Local testing runs ``local[N]``; the same config block is what we'd
 ship on a 1000-executor cluster — AQE on (runtime re-plan, skew-join
 splitting, partition coalescing), broadcast threshold sized for dim
 tables, Arrow enabled for the pandas-UDF surface.
+
+Every cache the library keeps per session (prepared plans, table
+plans, the block-manager input copies, spread() decisions, the text
+pipelines' persisted fragments) is a named slot of ONE table,
+reached through :func:`session_slot`:
+
+- The key is the session OBJECT, not its applicationId: sibling
+  sessions from ``spark.newSession()`` share an appId but not confs or
+  temp views, so an appId key would serve one session's plan to
+  another.
+- Weak keys alone cannot collect an entry: a cached DataFrame holds a
+  strong reference back to its session, so the entry keeps its own
+  key alive. :func:`session_slot` therefore evicts every session whose
+  SparkContext is stopped on each access, bounding the table to live
+  sessions.
+- Data under an ``sf_dir`` is assumed immutable for the session's
+  lifetime (documented, not checked): a cached plan pins the file
+  listing captured at its first build.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -109,3 +129,19 @@ def get_spark(app_name: str = "utils-infra-spark", cpus: int | None = None) -> S
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+# session -> {slot name -> slot dict}; see the module docstring
+_SESSION_STATE: weakref.WeakKeyDictionary[SparkSession, dict[str, dict]] = weakref.WeakKeyDictionary()
+
+
+def session_slot(spark: SparkSession, name: str) -> dict:
+    """The named per-session cache dict, created empty on first use.
+
+    Each call first drops every other session whose SparkContext is
+    stopped (it can never serve again) with all of its slots.
+    """
+    for sess in list(_SESSION_STATE.keys()):
+        if sess is not spark and sess._sc._jsc is None:
+            _SESSION_STATE.pop(sess, None)
+    return _SESSION_STATE.setdefault(spark, {}).setdefault(name, {})

@@ -12,10 +12,11 @@ under the broadcast threshold and join map-side.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from utils_infra_spark.session import session_slot
 
 TABLE_NAMES = (
     "region",
@@ -31,34 +32,20 @@ TABLE_NAMES = (
 )
 
 
-# Plan-level cache: session -> {(sf_dir, name) -> DataFrame}. A
-# DataFrame is an immutable logical plan, so handing the same object
-# to every query is safe and skips the per-read file listing + footer
-# read (~80 ms each on the driver — pure fixed overhead that
-# multiplies by tables-per-query × queries-per-session). Keyed by
-# SESSION OBJECT identity — sibling sessions from spark.newSession()
-# share an applicationId but not confs/temp views, so an appId key
-# could serve one session's plan to another. Weak keys plus
-# prune_stopped_sessions on access bound the cache to live sessions
-# (weak keys alone can't: a cached DataFrame strongly references its
-# session). Constraint (documented, not checked): the parquet
-# under sf_dir is immutable for the session's lifetime — the cached
-# plan pins the file listing captured at first build.
-_TABLE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-# Warm-path input cache: session -> {(sf_dir, name) -> DataFrame}
-# whose entries are eager localCheckpoint()s of the repartitioned
-# base tables — materialized once into the block manager (the moral
+# Session slots (utils_infra_spark.session): "tables" maps
+# (sf_dir, name) -> the parquet DataFrame. A DataFrame is an immutable
+# logical plan, so handing the same object to every query is safe and
+# skips the per-read file listing + footer read (~80 ms each on the
+# driver — pure fixed overhead that multiplies by tables-per-query ×
+# queries-per-session). "input" maps (sf_dir, name) -> (DataFrame,
+# persistent RDD ids): eager localCheckpoint()s of the repartitioned
+# base tables, materialized once into the block manager (the moral
 # analog of a buffer pool: INPUT caching, never result/shuffle
 # caching; every query over it still runs its full task counts, see
 # tests/test_plans.py::test_cached_input_fresh_select_reexecutes).
 # localCheckpoint persists at the RDD layer, NOT the SQL CacheManager,
-# so `spark.catalog.clearCache()` between bench runs cannot drop it.
-_INPUT_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-# session -> {"ids": set[int]} of the persistent RDD ids the input
-# cache created, so uncache_base_tables can free the real blocks
-_INPUT_CACHE_RDD_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# so `spark.catalog.clearCache()` between bench runs cannot drop it;
+# the recorded ids are what uncache_base_tables frees.
 
 # Which copy load_table serves: "parquet" (default — pushdown-friendly
 # scans, the only mode that exists at 100 TB) or "cached" (block-
@@ -80,46 +67,6 @@ def set_input_mode(mode: str) -> None:
     _input_mode = mode
 
 
-def prune_stopped_sessions(cache: weakref.WeakKeyDictionary) -> None:
-    """Evict entries whose session's SparkContext is stopped.
-
-    Weak keying alone cannot collect them: a cached DataFrame holds a
-    strong reference back to its session (``DataFrame._session``), so
-    a dict entry keeps its own key alive forever. Pruning on access
-    breaks that cycle for sessions that can never serve again (their
-    context is gone), bounding the caches to live sessions.
-    """
-    for sess in list(cache.keys()):
-        # only a PROVEN-stopped session is evicted. A Spark Connect
-        # session has no _sc at all — treating that AttributeError as
-        # 'stopped' would evict every live Connect session on each
-        # access and silently disable the caches the latency win
-        # depends on. Connect sessions expose `is_stopped` instead
-        # (pyspark.sql.connect.session), so probe that; a session we
-        # can probe NEITHER way is kept (no false evictions), accepting
-        # that such exotic sessions age out only with the process.
-        sc = getattr(sess, "_sc", None)
-        if sc is None:
-            stopped = getattr(sess, "is_stopped", None)
-            if stopped is True:
-                cache.pop(sess, None)
-            continue
-        try:
-            stopped = sc._jsc is None
-        except Exception:
-            stopped = True
-        if stopped:
-            cache.pop(sess, None)
-
-
-def _per_session(cache: weakref.WeakKeyDictionary, spark: SparkSession) -> dict:
-    prune_stopped_sessions(cache)
-    per = cache.get(spark)
-    if per is None:
-        per = cache[spark] = {}
-    return per
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Schema comes from parquet footers (no inference cost).
 
@@ -130,10 +77,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     key = (os.path.abspath(sf_dir), name)
     if _input_mode == "cached":
-        cached = _per_session(_INPUT_CACHE, spark).get(key)
+        cached = session_slot(spark, "input").get(key)
         if cached is not None:
-            return cached
-    per = _per_session(_TABLE_CACHE, spark)
+            return cached[0]
+    per = session_slot(spark, "tables")
     cached = per.get(key)
     if cached is not None:
         return cached
@@ -190,13 +137,12 @@ def cache_base_tables(
         partitions = spark.sparkContext.defaultParallelism
     if bytes_per_split is None:
         bytes_per_split = _CACHE_BYTES_PER_SPLIT
-    per = _per_session(_INPUT_CACHE, spark)
-    ids = _per_session(_INPUT_CACHE_RDD_IDS, spark).setdefault("ids", set())
+    per = session_slot(spark, "input")
     placed: dict[str, int] = {}
     for name in TABLE_NAMES:
         key = (os.path.abspath(sf_dir), name)
         if key in per:
-            placed[name] = per[key].rdd.getNumPartitions()
+            placed[name] = per[key][0].rdd.getNumPartitions()
             continue
         try:
             size = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
@@ -212,9 +158,7 @@ def cache_base_tables(
         # concurrent checkpoints elsewhere on the context need no
         # coordination. eager=True: this cache exists to PREPAY the
         # scan, so materialize now.
-        ckpt, new_ids = checkpoint_with_ids(df.repartition(n), eager=True)
-        per[key] = ckpt
-        ids.update(new_ids)
+        per[key] = checkpoint_with_ids(df.repartition(n), eager=True)
         placed[name] = n
     return placed
 
@@ -249,35 +193,15 @@ def checkpoint_with_ids(df: DataFrame, *, eager: bool = True) -> tuple[DataFrame
     materializes all upstream exchanges synchronously before
     returning).
 
-    If a future Spark changes the returned plan shape, the fallback
-    diffs against a pre-checkpoint snapshot and — because a
-    concurrent persist could slip into that window — attributes ONLY
-    an unambiguous single new id; on ambiguity it returns an empty
-    set, so the caller leaks bounded blocks (visible in Spark's
-    storage UI) rather than ever freeing someone else's. The
-    pre-snapshot is taken only after the direct read has failed ONCE
-    in this process (module flag): getPersistentRDDs builds a full
-    map copy JVM-side per call, a pure per-trigger tax on the
-    streaming hot path while the direct read keeps working. The one
-    call that discovers the failure therefore has no snapshot and
-    returns an empty set — a single bounded leak, after which every
-    call uses the fallback.
+    If a future Spark changes the returned plan shape, the id set is
+    empty: the caller leaks bounded blocks (visible in Spark's storage
+    UI) rather than ever freeing someone else's.
     """
-    global _direct_plan_id_works
-    before = None if _direct_plan_id_works else _persistent_rdd_ids(df.sparkSession)
     out = df.localCheckpoint(eager=eager)
     try:
-        rid = out._jdf.queryExecution().analyzed().rdd().id()
-        return out, {int(rid)}
+        return out, {int(out._jdf.queryExecution().analyzed().rdd().id())}
     except Exception:
-        if before is None:
-            _direct_plan_id_works = False
-            return out, set()
-        new_ids = _persistent_rdd_ids(df.sparkSession) - before
-        return out, new_ids if len(new_ids) == 1 else set()
-
-
-_direct_plan_id_works = True
+        return out, set()
 
 
 def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
@@ -302,16 +226,15 @@ def uncache_base_tables(spark: SparkSession) -> None:
 
     Unpersists the checkpointed RDDs by the ids recorded at
     materialization time — the only handle that actually frees the
-    blocks (the previous ``df.rdd.unpersist()`` acted on a freshly
-    derived RDD that was never persisted).
+    blocks (``df.rdd.unpersist()`` would act on a freshly derived RDD
+    that was never persisted). The session's prepared plans go with
+    them: a plan built over the freed copies would fail on its next
+    run with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
     """
-    per = _INPUT_CACHE.get(spark)
-    ids_entry = _INPUT_CACHE_RDD_IDS.get(spark)
-    ids = ids_entry.get("ids", set()) if ids_entry else set()
-    unpersist_rdd_ids(spark, ids)
-    ids.clear()
-    if per:
-        per.clear()
+    per = session_slot(spark, "input")
+    unpersist_rdd_ids(spark, set().union(*(ids for _, ids in per.values())))
+    per.clear()
+    session_slot(spark, "plans").clear()
 
 
 def spread(df: DataFrame, partitions: int | None = None, min_bytes: int | None = None) -> DataFrame:
@@ -350,22 +273,17 @@ def spread(df: DataFrame, partitions: int | None = None, min_bytes: int | None =
     # semantic hash (~0.5 ms). A table persisted AFTER a memoized
     # probe could flip the right answer — the stale entry costs only
     # parallelism on that one stage, never correctness, and dies with
-    # the session (weak key).
-    memo_key = None
+    # the session's "spread" slot.
+    memo = session_slot(df.sparkSession, "spread")
     try:
-        memo_key = (
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            partitions,
-            min_bytes,
-        )
-        per_sess = _SPREAD_MEMO.get(df.sparkSession)
-        if per_sess is not None and memo_key in per_sess:
-            return df.repartition(partitions) if per_sess[memo_key] else df
+        memo_key = (df._jdf.queryExecution().analyzed().semanticHash(), partitions, min_bytes)
     except Exception:
-        pass
-    need = _spread_needs_exchange(df, partitions, min_bytes)
-    if memo_key is not None:
-        _SPREAD_MEMO.setdefault(df.sparkSession, {})[memo_key] = need
+        memo_key = None
+    need = memo.get(memo_key)
+    if need is None:
+        need = _spread_needs_exchange(df, partitions, min_bytes)
+        if memo_key is not None:
+            memo[memo_key] = need
     return df.repartition(partitions) if need else df
 
 
@@ -419,10 +337,6 @@ def _spread_needs_exchange(df: DataFrame, partitions: int, min_bytes: int) -> bo
             return False
     return True
 
-
-# session -> {(semanticHash, partitions, min_bytes) -> bool}: memoized
-# spread() layout decisions (see spread; entries die with the session)
-_SPREAD_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 # gate below which spread() skips its exchange (see docstring)
 _SPREAD_MIN_BYTES = 32 * 1024 * 1024
