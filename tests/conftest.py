@@ -10,6 +10,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # get_spark's 24g default heap can exceed the host's memory, and G1
+    # grows the suite's JVM toward it (on a 16 GB, 4-core host: 9 GB
+    # resident after the parity sweep, and 14.7 GB under load, when the
+    # kernel killed it mid-suite). 6g leaves room for the 2g bench
+    # subprocess of test_bench_cli_prints_result_line.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     from utils_infra_spark.session import get_spark
 
     s = get_spark("utils-infra-tests", cpus=4)

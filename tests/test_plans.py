@@ -255,6 +255,7 @@ def test_prepared_plan_cache_reserves_same_object(spark, sf_dir):
     # a DataFrame is an immutable logical plan, so re-serving it is
     # semantically a no-op that skips only driver-side rebuild cost
     q = REGISTRY["pricing_summary"]
+    q.plan(spark, sf_dir)  # a first build may read lineitem's footer: a job, not cached
     a = q.plan(spark, sf_dir)
     b = q.plan(spark, sf_dir)
     assert a is b
@@ -567,25 +568,33 @@ def test_plan_cache_keys_on_tiny_input_measurement(spark, sf_dir):
     prepared-plan cache must rebuild when the tune_for_input
     measurement changes — not re-serve the stale strategy."""
     from utils_infra_spark.session import TINY_INPUT_CONF
+    from utils_infra_spark.sources.tables import (
+        cache_base_tables,
+        set_input_mode,
+        uncache_base_tables,
+    )
 
-    # exemplar: embedding_topk_cosine's size-gated top-k finish (the
-    # untuned/at-scale plan pre-top-ks per (partition, query) — its
-    # marker is the spark_partition_id grouping key; the tiny plan
-    # skips that whole stage). order_revenue_top10 was the previous
-    # exemplar until its SHJ special-case was dropped in r12.
-    q = REGISTRY["embedding_topk_cosine"]
+    # exemplar: text_stats_documents' spread() over the input cache.
+    # A 2-partition copy has fewer partitions than cores, so the
+    # untuned plan adds the round-robin exchange; a measured-tiny
+    # session skips it as pure latency.
+    q = REGISTRY["text_stats_documents"]
+    cache_base_tables(spark, sf_dir, partitions=2, bytes_per_split=1)
+    set_input_mode("cached")
     spark.conf.set(TINY_INPUT_CONF, "false")
     try:
         untuned = q.plan(spark, sf_dir)
         spark.conf.set(TINY_INPUT_CONF, "true")
         tuned = q.plan(spark, sf_dir)
         assert tuned is not untuned
-        assert "SPARK_PARTITION_ID" in plan_of_df(spark, untuned).upper()
-        assert "SPARK_PARTITION_ID" not in plan_of_df(spark, tuned).upper()
+        assert "RoundRobinPartitioning" in plan_of_df(spark, untuned)
+        assert "RoundRobinPartitioning" not in plan_of_df(spark, tuned)
         # same measurement -> same prepared object
         assert q.plan(spark, sf_dir) is tuned
     finally:
         spark.conf.set(TINY_INPUT_CONF, "false")
+        set_input_mode("parquet")
+        uncache_base_tables(spark)
 
 
 def test_uncache_frees_block_manager_copies(spark, sf_dir):
@@ -743,10 +752,43 @@ def test_uncacheable_plan_rebuilds_per_call(spark, sf_dir):
 
     _load()
     q = REGISTRY["char_lm_quality_documents"]
-    assert q.cache_plan is False
     assert q.plan(spark, sf_dir) is not q.plan(spark, sf_dir)
     qc = REGISTRY["pricing_summary"]
+    qc.plan(spark, sf_dir)  # a first build may read lineitem's footer: a job, not cached
     assert qc.plan(spark, sf_dir) is qc.plan(spark, sf_dir)
+
+
+def test_plan_rebuilt_when_build_runs_a_job(spark, sf_dir):
+    """The registry re-serves a plan only if building it ran no Spark
+    job: a builder that collects is rebuilt on every call, and a pure
+    builder gets the same object back."""
+    from utils_infra_spark.queries import Query
+
+    def collecting(spark, sf_dir):
+        return spark.range(len(spark.range(3).collect()))
+
+    def pure(spark, sf_dir):
+        return spark.range(3)
+
+    q = Query("throwaway_collecting", collecting, None)
+    assert q.plan(spark, sf_dir) is not q.plan(spark, sf_dir)
+    q = Query("throwaway_pure", pure, None)
+    assert q.plan(spark, sf_dir) is q.plan(spark, sf_dir)
+
+
+def test_registry_reserves_only_job_free_builds(spark, sf_dir):
+    """bloom's split and the top-k query-vector collect run jobs at
+    build, so their plans are rebuilt per call. The literal micro-dim
+    fold is the one exception: its jobs carry FOLD_TAG, so the two
+    literal-map builders stay cached. The first call may read table
+    footers (a job), so re-serving is checked from the second call."""
+    for name in ("bloom_novelty_documents", "embedding_topk_cosine"):
+        q = REGISTRY[name]
+        assert q.plan(spark, sf_dir) is not q.plan(spark, sf_dir), name
+    for name in ("enrich_customer_nation", "nation_revenue"):
+        q = REGISTRY[name]
+        q.plan(spark, sf_dir)
+        assert q.plan(spark, sf_dir) is q.plan(spark, sf_dir), name
 
 
 def test_dup_span_coverage_shuffles_hashes_not_text(spark, sf_dir):
@@ -899,10 +941,10 @@ def test_char_lm_rebuild_never_reuses_previous_cache(spark, sf_dir):
     explode WITHIN a build. Across builds the pin must hold: each
     rebuild unpersists the predecessor (Spark's CacheManager matches
     by logical-plan equality, so a stale entry would silently serve
-    the old run's explode — cross-run amortization the cache_plan=False
-    honesty pin forbids). Observable contract: persistent-RDD count
-    grows by at most ONE cached tris no matter how many times the
-    builder runs."""
+    the old run's explode — cross-run amortization the registry's
+    rebuild-per-call rule for job-running builders forbids).
+    Observable contract: persistent-RDD count grows by at most ONE
+    cached tris no matter how many times the builder runs."""
     from utils_infra_spark.pipeline.text import char_trigram_lm_scores
     from utils_infra_spark.sources import load_table
     from utils_infra_spark.sources.tables import _persistent_rdd_ids
@@ -1004,10 +1046,14 @@ def test_entity_resolution_no_nested_loop(spark, sf_dir):
 
 
 def test_equi_depth_no_unpartitioned_window_over_data(spark, sf_dir):
-    """The per-group rank must ride (flag, bin)-partitioned windows;
-    the only unpartitioned window sits over the aggregated bin table."""
+    """Ranks must ride bin-partitioned windows (global_rank); the only
+    unpartitioned window sits over the aggregated bin table. The
+    equi-depth rank is per (flag, bin), the quality deciles' per bin."""
     import re
 
-    plan = REGISTRY["equi_depth_price_histogram"].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    for m in re.finditer(r"Window \[[^\]]*row_number[^\]]*\], \[([^\]]*)\]", plan):
-        assert "__bin" in m.group(0), f"row_number window without bin partition:\n{m.group(0)}"
+    for name in ("equi_depth_price_histogram", "quality_decile_stats"):
+        plan = REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        ranks = list(re.finditer(r"Window \[[^\]]*(?:row_number|ntile)[^\]]*\], \[([^\]]*)\]", plan))
+        assert ranks, f"{name}: no rank window in plan"
+        for m in ranks:
+            assert "__bin" in m.group(0), f"{name}: rank window without bin partition:\n{m.group(0)}"

@@ -96,9 +96,10 @@ def test_checkpoint_with_ids_attributes_exactly_its_own_rdd(spark):
 def test_spread_memo_records_and_reuses_decision(spark):
     """spread()'s layout probe (inputFiles + a Py4J RDD
     materialization, ~40-50 ms per fresh Dataset) memoizes per
-    (semanticHash, partitions, min_bytes). Two semantically identical
-    FRESH DataFrames must share one memo entry and get the same
-    decision; a different partitions target is a separate entry."""
+    (semanticHash, partitions, min_bytes, tiny-input measurement).
+    Two semantically identical FRESH DataFrames must share one memo
+    entry and get the same decision; a different partitions target is
+    a separate entry."""
     from utils_infra_spark.session import session_slot
     from utils_infra_spark.sources.tables import spread
 
@@ -165,6 +166,30 @@ def test_one_owner_for_session_state():
                 rebound.update((mod, name) for name in node.names)
     assert weak_tables == {"session.py"}
     assert rebound == {("sources/tables.py", "_input_mode"), ("queries/__init__.py", "_loaded")}
+
+
+def test_fold_tag_only_in_literal_lookup_maps():
+    """The registry re-serves a plan despite jobs tagged FOLD_TAG, so
+    the tag may only wrap literal_lookup_maps' <=100-row collect; the
+    registry's plan() is its one reader."""
+    import ast
+    from pathlib import Path
+
+    import utils_infra_spark
+    from utils_infra_spark.operators.joins import FOLD_TAG
+
+    root = Path(utils_infra_spark.__file__).parent
+    users = set()
+    for path in root.rglob("*.py"):
+        mod = path.relative_to(root).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    if (isinstance(node, ast.Name) and node.id == "FOLD_TAG") or (
+                        isinstance(node, ast.Constant) and node.value == FOLD_TAG
+                    ):
+                        users.add((mod, fn.name))
+    assert users == {("operators/joins.py", "literal_lookup_maps"), ("queries/__init__.py", "plan")}
 
 
 def test_library_env_vars_are_deployment_only():

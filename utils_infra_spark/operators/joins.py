@@ -26,6 +26,11 @@ def broadcast_lookup(
     return fact.join(F.broadcast(dim), on=on, how=how)
 
 
+# Job tag of literal_lookup_maps' collect, the one build-time job that
+# queries/__init__.py::Query.plan does not count against re-serving.
+FOLD_TAG = "utils_infra_spark.literal_fold"
+
+
 def literal_lookup_maps(
     dim: DataFrame, key: str, value_cols: list[str], *, max_rows: int = 100
 ) -> dict[str, Column] | None:
@@ -46,8 +51,16 @@ def literal_lookup_maps(
     back to :func:`broadcast_lookup` (the collect saw at most
     ``max_rows``+1 rows, so the guard never pulls a big dim to the
     driver).
+
+    The collect runs under ``FOLD_TAG``, so the query registry still
+    re-serves a plan that folds a ≤``max_rows`` dim into literals.
     """
-    rows = dim.select(key, *dict.fromkeys(value_cols)).limit(max_rows + 1).collect()
+    sc = dim.sparkSession.sparkContext
+    sc.addJobTag(FOLD_TAG)
+    try:
+        rows = dim.select(key, *dict.fromkeys(value_cols)).limit(max_rows + 1).collect()
+    finally:
+        sc.removeJobTag(FOLD_TAG)
     if len(rows) > max_rows:
         return None
     # a NULL key never equi-matches in a join either

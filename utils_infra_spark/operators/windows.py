@@ -1,9 +1,9 @@
 """Window / ranking operators (SURVEY.md §2.6, W1–W4).
 
 W1 (keep-latest-per-key) lives in joins.latest_wins since the
-reference uses it as a merge primitive. These are the ranking and
-per-field latest forms; W3's time windows are ``F.window`` in the
-queries and streaming code.
+reference uses it as a merge primitive, and its per-field form is
+streaming/upsert.py::keyed_upsert_batch. This is the ranking form;
+W3's time windows are ``F.window`` in the queries and streaming code.
 """
 
 from __future__ import annotations
@@ -31,19 +31,3 @@ def top_n_per_group(df: DataFrame, partition: list[str], order: list, n: int, *,
     w = Window.partitionBy(*partition).orderBy(*order)
     return df.withColumn(rank_alias, F.row_number().over(w)).where(F.col(rank_alias) <= n)
 
-
-def last_non_null_per_key(df: DataFrame, key: str, ts: str, value_cols: list[str], *tie_break: str) -> DataFrame:
-    """W1's per-field form (ref ais-proxy/server.js:390-592): the
-    vessel cache keeps the latest NON-NULL value per field per key
-    (position messages don't carry static fields and vice versa).
-    `last(ignorenulls=True)` over a full-frame window, then one row
-    per key. Extra ``tie_break`` columns (e.g. a unique event id)
-    make the winner deterministic when timestamps collide."""
-    w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(ts).asc(), *[F.col(t).asc() for t in tie_break])
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    cols = [F.col(key)] + [F.last(c, ignorenulls=True).over(w).alias(c) for c in value_cols]
-    cols.append(F.max(F.col(ts)).over(w).alias(ts))
-    return df.select(*cols).dropDuplicates([key])

@@ -318,9 +318,9 @@ def brute_force_topk_codegen(
         .select(F.col("t.query_id").alias("query_id"), "cand_id", F.col("t.cos_sim").alias("cos_sim"))
         .where("query_id <> cand_id")
     )
-    # size-gated finish (the is_tiny_input pattern, cf. the top-10
-    # query's SHJ hint): on a measured-tiny input the per-partition
-    # pre-top-k stage costs a whole extra exchange + stage schedule
+    # size-gated finish (the is_tiny_input pattern, cf. spread()'s
+    # exchange over the input cache): on a measured-tiny input the
+    # per-partition pre-top-k stage costs a whole extra exchange + stage schedule
     # (~30 ms) to prune a few hundred rows — one aggregate is faster.
     # Untuned / at-scale sessions ALWAYS take the two-level shape:
     # per-(partition, query) partial top-k bounds both the shuffle

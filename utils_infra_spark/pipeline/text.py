@@ -1056,8 +1056,9 @@ def dsir_importance_scores(df, text_col: str, id_col: str, *, target_sql: str = 
     # explode + one md5 per token) runs once per build, not twice
     # (measured 1.85 s → 1.1 s at 50k docs). Same per-build
     # unpersist-predecessor discipline as the char-LM cache: a REBUILD
-    # (cache_plan=False) must never silently serve the previous run's
-    # blocks via CacheManager plan-equality matching.
+    # (the fit runs a job, so the registry rebuilds per plan() call)
+    # must never silently serve the previous run's blocks via
+    # CacheManager plan-equality matching.
     from pyspark import StorageLevel
 
     per = session_slot(tok.sparkSession, "dsir")

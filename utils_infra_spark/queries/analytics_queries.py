@@ -715,12 +715,12 @@ def event_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Quality-decile curriculum binning: ntile(10) over a TOTAL order (score, doc_id) — both "
     "engines define ntile identically given a total order; a score-only ordering would make bucket "
-    "boundaries nondeterministic. The global sort is a range-partitioned exchange; at 100 TB swap "
-    "ntile for approx-quantile cutpoints broadcast back (same output contract).",
+    "boundaries nondeterministic. The rank comes from global_rank (value-binned local windows, no "
+    "single-task sort) and a broadcast count; SQL NTILE follows exactly from rank and n: with "
+    "q = n DIV 10 and r = n MOD 10, the first r*(q+1) ranks fill buckets of q+1, the rest buckets of q.",
 )
 def quality_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
+    from ..operators.ranking import global_rank
     from ..pipeline import text as T
 
     docs = load_table(spark, sf_dir, "documents")
@@ -728,11 +728,15 @@ def quality_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "doc_id", F.round(T.quality_score("text", stopwords), 6).alias("quality")
     ).where(F.size(F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+")) > 0)
-    ranked = scored.select(
-        "doc_id", "quality", F.ntile(10).over(Window.orderBy("quality", "doc_id")).alias("decile")
+    total = scored.agg(F.count(F.lit(1)).alias("n")).selectExpr("n DIV 10 AS q", "n % 10 AS r")
+    ranked = global_rank(scored, ["quality", "doc_id"], rank_col="rn").crossJoin(F.broadcast(total))
+    decile = F.expr(
+        "CASE WHEN rn <= r * (q + 1) THEN (rn - 1) DIV (q + 1) + 1 "
+        "ELSE r + (rn - 1 - r * (q + 1)) DIV q + 1 END"
     )
     return (
-        ranked.groupBy("decile")
+        ranked.withColumn("decile", decile.cast("int"))
+        .groupBy("decile")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.min("quality"), 6).alias("q_min"),

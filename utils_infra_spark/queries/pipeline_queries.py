@@ -177,9 +177,15 @@ def minhash_band_keys_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Exact n-gram Jaccard pairs bucketed by lang (bounded quadratic; the LSH-free exact path).",
 )
 def ngram_jaccard_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _lang_gram_pairs(load_table(spark, sf_dir, "documents"))
+
+
+def _lang_gram_pairs(docs: DataFrame) -> DataFrame:
+    """Same-lang doc pairs (id_a < id_b) whose distinct token-3-gram
+    Jaccard, rounded to 6 places, is >= 0.4: the broadcast self-join of
+    ngram_jaccard_bucketed and of near_dup_clusters' first detector."""
     from ..pipeline.dedup import jaccard, shingles_from_tokens
 
-    docs = load_table(spark, sf_dir, "documents")
     base = (
         spread(docs.select("doc_id", "lang", "text"))
         .select("doc_id", "lang", F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+").alias("toks"))
@@ -812,26 +818,9 @@ def snapshot_diff_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.cluster import cluster_documents
-    from ..pipeline.dedup import jaccard, shingles_from_tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    base = (
-        spread(docs.select("doc_id", "lang", "text"))
-        .select("doc_id", "lang", F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+").alias("toks"))
-        .select(
-            "doc_id",
-            "lang",
-            F.array_distinct(shingles_from_tokens("toks", 3)).alias("grams"),
-            F.size("toks").alias("ntok"),
-        )
-        .where(F.col("ntok") >= 3)
-    )
-    a, b = spread(base).alias("a"), F.broadcast(base).alias("b")
-    jp = (
-        a.join(b, (F.col("a.lang") == F.col("b.lang")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .where(F.round(jaccard(F.col("a.grams"), F.col("b.grams")), 6) >= 0.4)
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    )
+    jp = _lang_gram_pairs(docs).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     pref = docs.select("doc_id", F.substring("text", 1, 32).alias("pfx"))
     pa, pb = pref.alias("pa"), pref.alias("pb")
     pp = (
@@ -1288,10 +1277,9 @@ def paragraph_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LM: add-k-smoothed -ln P(c3|c1c2) per document (nats/char), reduced as an "
     "integer half-up micro-nat mean over per-trigram nanonat terms — "
     "order-independent cross-engine (never round(avg(double))). The fit "
-    "collects the bounded model with a corpus pass AT BUILD TIME, so the plan "
-    "is registered uncacheable: every plan() call re-fits — a timing loop can "
-    "never amortize the fit away while the paired oracle still pays it.",
-    cache_plan=False,
+    "collects the bounded model with a corpus pass AT BUILD TIME, so the "
+    "registry never re-serves the plan: every plan() call re-fits — a timing "
+    "loop can never amortize the fit away while the paired oracle still pays it.",
 )
 def char_lm_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1593,12 +1581,11 @@ def _kmeans_iter_sql(prev_cents: str, e: str, tag: str, dim: int = 64) -> str:
     "model collected to the driver and fed back as the next round's "
     "literal codebook. The oracle unrolls both rounds in SQL - the whole "
     "iterative algorithm is hash-checkable, not rows-only. The builder "
-    "EXECUTES a job per round at plan time, so the plan is uncacheable "
-    "(cache_plan=False): a timing loop pays every Lloyd round every run. "
+    "EXECUTES a job per round at plan time, so the registry never re-serves "
+    "the plan: a timing loop pays every Lloyd round every run. "
     "100 TB: per round, one scan + one bounded-key shuffle; the model "
     "(nlist x dim x 8 B) rides the closure; empty clusters drop on both "
     "engines.",
-    cache_plan=False,
 )
 def kmeans_refine_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.similarity import ivf_assign
@@ -1803,9 +1790,8 @@ def _dsir_bucket_sql(col: str, n_buckets: int) -> str:
     "add-half smoothed, per-bucket terms quantized to integer nanonats "
     "driver-side with glibc ln, per-doc INTEGER sum published raw (no "
     "division — negative integer division is not engine-portable). Fit is "
-    "one bounded-key corpus pass collected+broadcast; registered "
-    "uncacheable so every plan() call re-pays the fit.",
-    cache_plan=False,
+    "one bounded-key corpus pass collected+broadcast at build, so the "
+    "registry never re-serves the plan: every plan() call re-pays the fit.",
 )
 def dsir_importance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2070,9 +2056,8 @@ def control_char_profile_documents(spark: SparkSession, sf_dir: str) -> DataFram
     "score table is one narrow row per doc; the 100 TB swap-in is "
     "ccnet_buckets_approx (approx_percentile cutoffs per lang, broadcast, "
     "in-row assignment — measured >= 99% bucket agreement at sf0.1). "
-    "Registered uncacheable: the "
-    "char-LM fit re-runs per plan() call, same honesty pin as its parent.",
-    cache_plan=False,
+    "The char-LM fit runs at build, so the plan is rebuilt per plan() call, "
+    "like its parent's.",
 )
 def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2105,9 +2090,8 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one in-row CASE) instead of the exact ntile's per-language global "
     "sort. Same scoring pipeline as ccnet_perplexity_buckets; bucket "
     "agreement vs the exact form measured >= 99% at sf0.1 (GK rank "
-    "error n/10000 plus boundary ties). Registered uncacheable: the "
-    "char-LM fit executes per plan() call.",
-    cache_plan=False,
+    "error n/10000 plus boundary ties). The char-LM fit runs at build, so "
+    "the plan is rebuilt per plan() call.",
 )
 def ccnet_buckets_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.text import bucket_by_cutoffs

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregations import fixed_point
 from ..operators.filters import coordinate_valid
-from ..operators.windows import last_non_null_per_key
 from ..sources import load_table
+from ..streaming.upsert import keyed_upsert_batch
 from . import register
 
 
@@ -97,7 +97,7 @@ def last_nonnull_state_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type").isin("view", "click"), F.lit(None)).otherwise(F.col("value")).alias("sparse_value"),
         F.when(F.col("event_type") == "error", F.col("event_type")).alias("last_error"),
     )
-    return last_non_null_per_key(sparse, "user_id", "ts", ["sparse_value", "last_error"], "event_id")
+    return keyed_upsert_batch(sparse, "user_id", "ts", ["sparse_value", "last_error"], tiebreak="event_id")
 
 
 @register(

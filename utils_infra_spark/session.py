@@ -81,11 +81,11 @@ TINY_INPUT_CONF = "spark.utils_infra.tiny_input"
 def is_tiny_input(spark: SparkSession) -> bool:
     """True iff tune_for_input measured this session's input as tiny.
 
-    Plan builders use this for the ONE decision class Catalyst's
-    static planner gets wrong without AQE: physical join strategy on
-    a tiny input (e.g. shuffled-hash instead of sort-merge when both
-    sides are KBs and a sort is pure overhead). Defaults to False —
-    an untuned session always gets the spill-safe at-scale plans.
+    Plan builders use this for the size choices AQE would otherwise
+    make at run time: whether spread() adds its exchange over the
+    input cache, and whether the cosine top-k pre-ranks per partition.
+    Defaults to False — an untuned session always gets the spill-safe
+    at-scale plans.
     """
     try:
         return spark.conf.get(TINY_INPUT_CONF, "false") == "true"

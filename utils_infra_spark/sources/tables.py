@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from utils_infra_spark.session import session_slot
+from utils_infra_spark.session import is_tiny_input, session_slot
 
 TABLE_NAMES = (
     "region",
@@ -267,16 +267,17 @@ def spread(df: DataFrame, partitions: int | None = None, min_bytes: int | None =
     if min_bytes is None:
         min_bytes = _SPREAD_MIN_BYTES
     # The layout probe below (inputFiles + a Py4J RDD materialization)
-    # costs ~40-50 ms per FRESH Dataset — uncacheable-plan builders
-    # (char-LM, DSIR fits) pay it on every rebuild. The answer is a
-    # function of the logical plan within a session, so memoize it by
-    # semantic hash (~0.5 ms). A table persisted AFTER a memoized
-    # probe could flip the right answer — the stale entry costs only
-    # parallelism on that one stage, never correctness, and dies with
-    # the session's "spread" slot.
+    # costs ~40-50 ms per FRESH Dataset — builders the registry
+    # rebuilds per call (char-LM, DSIR fits) pay it on every rebuild.
+    # The answer is a function of the logical plan and the tiny-input
+    # measurement within a session, so memoize it by both (~0.5 ms). A
+    # table persisted AFTER a memoized probe could flip the right
+    # answer — the stale entry costs only parallelism on that one
+    # stage, never correctness, and dies with the session's "spread"
+    # slot.
     memo = session_slot(df.sparkSession, "spread")
     try:
-        memo_key = (df._jdf.queryExecution().analyzed().semanticHash(), partitions, min_bytes)
+        memo_key = (df._jdf.queryExecution().analyzed().semanticHash(), partitions, min_bytes, is_tiny_input(df.sparkSession))
     except Exception:
         memo_key = None
     need = memo.get(memo_key)
@@ -304,11 +305,8 @@ def _spread_needs_exchange(df: DataFrame, partitions: int, min_bytes: int) -> bo
         # callers pass min_bytes=0 and keep their exchange. Checked
         # FIRST — it is one conf read, while the partition probe below
         # compiles the physical plan and materializes a Py4J RDD.
-        if min_bytes > 0:
-            from utils_infra_spark.session import is_tiny_input
-
-            if is_tiny_input(df.sparkSession):
-                return False
+        if min_bytes > 0 and is_tiny_input(df.sparkSession):
+            return False
         # non-file scan (e.g. the block-manager input cache): if the
         # physical plan already carries >= `partitions` partitions the
         # exchange adds nothing — the cached copy was repartitioned at
