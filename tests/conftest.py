@@ -10,11 +10,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    # get_spark's 24g default heap can exceed the host's memory, and G1
-    # grows the suite's JVM toward it (on a 16 GB, 4-core host: 9 GB
-    # resident after the parity sweep, and 14.7 GB under load, when the
-    # kernel killed it mid-suite). 6g leaves room for the 2g bench
-    # subprocess of test_bench_cli_prints_result_line.
+    # G1 grows the suite's JVM toward its heap cap (on a 16 GB, 4-core
+    # host a 24g cap reached 9 GB resident after the parity sweep, and
+    # 14.7 GB under load, when the kernel killed it mid-suite). 6g, below
+    # get_spark's half-of-memory default there, leaves room for the 2g
+    # bench subprocess of test_bench_cli_prints_result_line.
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     from utils_infra_spark.session import get_spark
 
@@ -33,6 +33,18 @@ def spark():
     s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def persistent_rdd_ids(spark):
+    """Callable returning the ids of the context's persisted RDDs (the
+    JVM block-manager view), for tests that check what a checkpoint
+    owner leaves behind."""
+
+    def ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    return ids
 
 
 @pytest.fixture(scope="session")

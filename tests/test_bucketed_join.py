@@ -16,7 +16,7 @@ import re
 
 import pytest
 
-from utils_infra_spark.sources.tables import load_table, read_bucketed, write_bucketed
+from utils_infra_spark.sources.tables import load_table, write_bucketed
 
 
 def _plan(df) -> str:
@@ -42,7 +42,7 @@ def bucketed(spark, sf_dir, tmp_path_factory):
 
 def test_bucketed_join_zero_exchange_and_value_equal(spark, sf_dir, bucketed):
     orders, li = bucketed
-    bo, bl = read_bucketed(spark, "b_orders"), read_bucketed(spark, "b_lineitem")
+    bo, bl = spark.table("b_orders"), spark.table("b_lineitem")
     # forbid broadcast so the join strategy under test is the SMJ the
     # 100 TB fact-to-fact case would take
     orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -76,8 +76,8 @@ def test_bucket_count_mismatch_falls_back_to_exchange(spark, sf_dir, bucketed, t
     orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bo = read_bucketed(spark, "b_orders")
-        bl4 = read_bucketed(spark, "b_lineitem_4")
+        bo = spark.table("b_orders")
+        bl4 = spark.table("b_lineitem_4")
         joined = bo.join(bl4, bo["o_orderkey"] == bl4["l_orderkey"])
         plan = _plan(joined)
         assert "SortMergeJoin" in plan
@@ -92,7 +92,7 @@ def test_groupby_on_bucket_key_skips_exchange(spark, sf_dir, bucketed):
     the scan's hash-partitioned output satisfies the aggregate's
     distribution requirement, so per-batch rollups over a bucketed
     corpus pay zero shuffles."""
-    bl = read_bucketed(spark, "b_lineitem")
+    bl = spark.table("b_lineitem")
     agg = bl.groupBy("l_orderkey").count()
     plan = _plan(agg)
     assert "Exchange" not in plan, plan

@@ -165,14 +165,12 @@ def test_cms_never_underestimates_and_merges(spark):
     assert merged == whole
 
 
-def test_cc_frees_superseded_round_checkpoints(spark):
+def test_cc_frees_superseded_round_checkpoints(spark, persistent_rdd_ids):
     """Dataset.unpersist on a localCheckpoint'd frame is a silent
     no-op (only the SQL CacheManager is consulted), so rounds must be
     freed BY RDD ID — exactly one persistent RDD (the converged edge
     set, the result's lineage) may survive the iteration."""
     from utils_infra_spark.pipeline.cluster import connected_components
-
-    from utils_infra_spark.sources.tables import _persistent_rdd_ids
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 200, 2)] + [(i, i + 1) for i in range(1, 199, 2)],
@@ -182,8 +180,8 @@ def test_cc_frees_superseded_round_checkpoints(spark):
     # concurrently collect persisted RDDs left by earlier tests (the
     # map holds them weakly), so a count diff is flaky — new ids are
     # what this test owns
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids()
     out = connected_components(edges)
     assert out.count() == 200  # one chain -> one component of all 200 nodes
-    new = _persistent_rdd_ids(spark) - before
+    new = persistent_rdd_ids() - before
     assert len(new) == 1, f"expected only the converged set persisted, got {sorted(new)}"

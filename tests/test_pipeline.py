@@ -91,88 +91,34 @@ def test_brute_force_topk_ranks_by_cosine(spark):
     assert out[0].rnk == 1 and out[0].cos_sim > 0.99
 
 
-def test_brute_force_topk_auto_selects_by_query_count(spark):
-    """|Q| auto-select (removes the documented manual foot-gun): a
-    small query set routes to the all-JVM codegen twin (Python-free
-    plan), a large one to the Arrow matmul kernel, bucket_col forces
-    the Arrow kernel — and BOTH regimes return correct top-k."""
+def test_brute_force_topk_bucket_col_ranks_within_own_bucket(spark):
+    """With bucket_col (the LSH/IVF call sites) each query ranks ONLY
+    the candidates of its own bucket: every returned candidate shares
+    the query's bucket, and each query's list equals an unbucketed
+    top-k over its bucket alone. Neighbouring ids have the closest
+    vectors here and sit in different buckets, so a leak would show."""
     import math
-
-    from utils_infra_spark.pipeline.similarity import brute_force_topk_auto
 
     dim = 8
     rows = [
-        (i, [math.cos(0.013 * i * (j + 1)) for j in range(dim)])
-        for i in range(600)
+        (i, [math.cos(0.013 * i * (j + 1)) for j in range(dim)], i % 4) for i in range(200)
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, b int")
+    bucket_of = {i: b for i, _, b in rows}
+    queries = df.where("vec_id < 8")
 
-    def plan_str(out):
-        return out._jdf.queryExecution().executedPlan().toString()
-
-    # |Q|=8 → codegen twin: Python-free plan
-    small = brute_force_topk_auto(df.where("vec_id < 8"), df, k=3, in_dim=dim)
-    p = plan_str(small)
-    for bad in ("ArrowEval", "MapInArrow", "BatchEval", "PythonUDF", "MapInPandas"):
-        assert bad not in p, p[:1500]
-    got_small = small.collect()
-
-    # |Q|=500 → Arrow kernel: the codegen plan would carry 500 literal
-    # arrays; the auto entry must route to the matmul twin
-    big = brute_force_topk_auto(df.where("vec_id < 500"), df, k=3, in_dim=dim)
-    assert "MapInArrow" in plan_str(big)
-    got_big = big.collect()
-
-    # correctness in both regimes: rnk 1..k per query, and the |Q|=8
-    # queries' neighbor SETS agree across the two kernels (contracts
-    # differ only in last-digit quantization, not in ranking here)
-    by_q_small = {}
-    for r in got_small:
-        by_q_small.setdefault(r.query_id, []).append((r.rnk, r.cand_id))
-    big_by_q = {}
-    for r in got_big:
-        big_by_q.setdefault(r.query_id, []).append((r.rnk, r.cand_id))
-    assert set(by_q_small) == set(range(8))
-    assert len(big_by_q) == 500
-    for q, pairs in by_q_small.items():
-        assert sorted(rk for rk, _ in pairs) == [1, 2, 3]
-        assert {c for _, c in pairs} == {c for _, c in big_by_q[q]}, q
-
-    # bucket_col forces the Arrow kernel even at tiny |Q|
-    bdf = df.selectExpr("vec_id", "embedding", "CAST(vec_id % 4 AS INT) AS b")
-    bucketed = brute_force_topk_auto(
-        bdf.where("vec_id < 4"), bdf, k=2, bucket_col="b", in_dim=dim
-    )
-    assert "MapInArrow" in plan_str(bucketed)
-    assert bucketed.count() > 0
-
-
-def test_brute_force_topk_auto_infers_in_dim(spark):
-    """With in_dim unspecified, the auto entry point infers the
-    dimension from the probed query vectors — a non-64-dim caller at
-    small |Q| must NOT get a silently empty result (the old default
-    in_dim=64 made the codegen row-domain gate drop every row)."""
-    import math
-
-    from utils_infra_spark.pipeline.similarity import brute_force_topk_auto
-
-    dim = 8  # != the codegen twin's historical default of 64
-    rows = [(i, [math.cos(0.013 * i * (j + 1)) for j in range(dim)]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    inferred = brute_force_topk_auto(df.where("vec_id < 6"), df, k=3).collect()
-    explicit = brute_force_topk_auto(df.where("vec_id < 6"), df, k=3, in_dim=dim).collect()
-    assert len(inferred) == 18  # 6 queries x k=3 — NOT empty
-    assert {(r.query_id, r.rnk, r.cand_id) for r in inferred} == {
-        (r.query_id, r.rnk, r.cand_id) for r in explicit
-    }
-
-    # mixed query-vector lengths: raise, never silently drop a dim
-    mixed = df.where("vec_id < 3").union(
-        spark.createDataFrame([(99, [1.0, 2.0])], "vec_id long, embedding array<float>")
-    )
-    with pytest.raises(ValueError, match="mixed lengths"):
-        brute_force_topk_auto(mixed, df, k=3)
+    got = {}
+    for r in brute_force_topk(queries, df, k=3, bucket_col="b").collect():
+        assert bucket_of[r.cand_id] == bucket_of[r.query_id], r
+        got.setdefault(r.query_id, set()).add((r.rnk, r.cand_id, r.cos_sim))
+    want = {}
+    for b in range(4):
+        for r in brute_force_topk(
+            queries.where(f"b = {b}"), df.where(f"b = {b}"), k=3
+        ).collect():
+            want.setdefault(r.query_id, set()).add((r.rnk, r.cand_id, r.cos_sim))
+    assert set(got) == set(range(8))
+    assert got == want
 
 
 def test_cosine_identity(spark):
@@ -312,71 +258,6 @@ def test_shingles_from_tokens_expected_values(spark):
         assert [got[t] for (t,) in texts] == expected, (k, got)
 
 
-# ----------------------------------------------------- repetition signals
-def test_dup_line_and_paragraph_fractions(spark):
-    from utils_infra_spark.pipeline.text import (
-        dup_line_char_fraction,
-        dup_line_fraction,
-        dup_paragraph_fraction,
-        passes_repetition_filters,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "aa\naa\nb"),          # 3 lines, 'aa' repeats: line frac 1/3, char frac 4/5
-            (2, "x\n\nx\n\nyy"),       # paragraphs x,x,yy: para frac 1/3
-            (3, "clean\ntext\nhere"),  # no repetition
-            (4, ""),                   # empty → all 0.0, passes
-        ],
-        "id int, text string",
-    )
-    out = {
-        r.id: r
-        for r in df.select(
-            "id",
-            dup_line_fraction("text").alias("lf"),
-            dup_paragraph_fraction("text").alias("pf"),
-            dup_line_char_fraction("text").alias("cf"),
-            passes_repetition_filters("text").alias("ok"),
-        ).collect()
-    }
-    assert abs(out[1].lf - 1 / 3) < 1e-6
-    assert abs(out[1].cf - 4 / 5) < 1e-6   # 'aa' twice = 4 chars of 5 total
-    assert not out[1].ok                   # 1/3 > 0.30 line threshold
-    assert abs(out[2].pf - 1 / 3) < 1e-6
-    assert out[3].lf == 0.0 and out[3].pf == 0.0 and out[3].cf == 0.0 and out[3].ok
-    assert out[4].lf == 0.0 and out[4].ok
-
-
-def test_top_ngram_stats(spark):
-    from utils_infra_spark.pipeline.text import top_ngram_stats
-
-    df = spark.createDataFrame(
-        [
-            (1, "the cat the cat sat"),  # top 2-gram 'the cat' x2, 7 chars, 19 total
-            (2, "one"),                  # too short for 2-grams
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in top_ngram_stats(df, "text", "doc_id", n=2).collect()}
-    assert out[1].top_gram == "the cat"
-    assert out[1].top_gram_count == 2
-    assert abs(out[1].top_gram_char_fraction - 2 * 7 / 19) < 1e-6
-    assert out[2].top_gram is None and out[2].top_gram_char_fraction == 0.0
-
-
-def test_top_ngram_stats_partition_independent(spark):
-    """max_by over (count, gram) structs must give the same winner
-    whatever the partitioning — the determinism contract."""
-    from utils_infra_spark.pipeline.text import top_ngram_stats
-
-    rows = [(i, "a b a b c d c d e") for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    one = {r.doc_id: (r.top_gram, r.top_gram_count) for r in top_ngram_stats(df.coalesce(1), "text", "doc_id").collect()}
-    many = {r.doc_id: (r.top_gram, r.top_gram_count) for r in top_ngram_stats(df.repartition(7), "text", "doc_id").collect()}
-    assert one == many
-
-
 def test_rolling_fingerprint_empty_doc_is_null(spark):
     """A blank document must yield a NULL fingerprint, not crash the
     job (element_at index 0)."""
@@ -504,18 +385,6 @@ def test_char_entropy_stats(spark):
     assert out[4].distinct_chars == 4
 
 
-def test_centroids_by_key_assembles_mean_vectors(spark):
-    from utils_infra_spark.pipeline.similarity import centroids_by_key
-
-    df = spark.createDataFrame(
-        [(1, "a", [1.0, 3.0]), (2, "a", [3.0, 5.0]), (3, "b", [10.0, 0.0])],
-        "vec_id long, label string, embedding array<float>",
-    )
-    out = {r.key: r.centroid for r in centroids_by_key(df).collect()}
-    assert out["a"] == [2.0, 4.0]
-    assert out["b"] == [10.0, 0.0]
-
-
 def test_line_dedup_corpus_semantics(spark):
     from utils_infra_spark.pipeline.dedup import line_dedup_corpus
 
@@ -627,60 +496,6 @@ def test_bloom_novelty_flags_and_no_false_negatives(spark):
     assert all(r.maybe_seen == r.exact_seen for r in out.values())
 
 
-@pytest.mark.parametrize("n_shards", [1, 4, 8])
-def test_bloom_novelty_sharded_verdict_equality(spark, n_shards):
-    """The 100 TB sharded form (filter words stay a DataFrame,
-    digest-prefix co-partitioned equi-join) must produce EXACTLY the
-    broadcast/literal form's verdicts — sharding is a physical
-    strategy, never a semantics change. Run a corpus big enough that
-    the filter has real collisions in play (FP positions possible),
-    plus exact dups, across 1/4/8 shards."""
-    from utils_infra_spark.pipeline.dedup import bloom_novelty
-
-    rows = [(i, f"document number {i} payload {i % 37}") for i in range(1, 201)]
-    # increment half: 30 exact dups of corpus texts + 70 novel
-    rows += [(200 + i, f"document number {i} payload {i % 37}") for i in range(1, 31)]
-    rows += [(230 + i, f"novel increment text {i}") for i in range(1, 71)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    lit_form = {
-        r.doc_id: r.maybe_seen
-        for r in bloom_novelty(docs, "text", "doc_id", 200, with_exact=False).collect()
-    }
-    sharded = {
-        r.doc_id: r.maybe_seen
-        for r in bloom_novelty(
-            docs, "text", "doc_id", 200, sharded=n_shards, with_exact=False
-        ).collect()
-    }
-    assert lit_form == sharded
-    # the 30 exact dups must all be maybe_seen in both forms
-    assert all(lit_form[200 + i] for i in range(1, 31))
-
-
-def test_bloom_novelty_sharded_plan_never_broadcasts_filter(spark):
-    """sharded=N exists because the filter is too big to broadcast at
-    scale — so its plan must contain NO BroadcastExchange anywhere
-    (with_exact=False drops the scaffolding join too) and must carry
-    the shard key on both sides of the word join."""
-    from utils_infra_spark.pipeline.dedup import bloom_novelty
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(1, 41)], "doc_id long, text string"
-    )
-    plan = (
-        bloom_novelty(docs, "text", "doc_id", 20, sharded=4, with_exact=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastExchange" not in plan, plan[:2000]
-    assert "__shard" in plan
-    # the 100 TB contract, pinned on the exchanges themselves: the
-    # word-routing and reduction shuffles carry (doc_id, pos/word)
-    # pairs — never the document text
-    for ln in plan.splitlines():
-        if "Exchange" in ln:
-            assert "text" not in ln, ln
-
-
 def test_dup_span_coverage_semantics(spark):
     from utils_infra_spark.pipeline.dedup import dup_span_coverage
 
@@ -773,6 +588,18 @@ def test_repetition_profile_hand_computed(spark):
     assert r2.n_lines == 1 and r2.dup_line_frac == 0.0
     assert r2.top_2gram_char_frac == 0.16129   # 10/62 -> 161290 micro
     assert r2.gopher_pass is True
+
+    # tied top 2-grams "a b" and "c d" (x2 each): the ASC-least wins,
+    # 2*3 chars over 17, whatever the partitioning
+    ties = spark.createDataFrame(
+        [(i, "a b a b c d c d e") for i in range(20)], "doc_id long, text string"
+    )
+    one, many = (
+        sorted(repetition_profile(d, "text", "doc_id").collect(), key=lambda r: r.doc_id)
+        for d in (ties.coalesce(1), ties.repartition(7))
+    )
+    assert one == many
+    assert {r.top_2gram_char_frac for r in one} == {0.352941}
 
 
 def test_repetition_profile_paragraphs_and_thresholds(spark):

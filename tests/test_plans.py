@@ -597,24 +597,23 @@ def test_plan_cache_keys_on_tiny_input_measurement(spark, sf_dir):
         uncache_base_tables(spark)
 
 
-def test_uncache_frees_block_manager_copies(spark, sf_dir):
+def test_uncache_frees_block_manager_copies(spark, sf_dir, persistent_rdd_ids):
     """uncache_base_tables must free the actual checkpoint blocks:
     the persistent-RDD set returns to its baseline (df.rdd.unpersist
     on a derived RDD was a silent no-op)."""
     from utils_infra_spark.sources.tables import (
-        _persistent_rdd_ids,
         cache_base_tables,
         set_input_mode,
         uncache_base_tables,
     )
 
-    base = _persistent_rdd_ids(spark)
+    base = persistent_rdd_ids()
     cache_base_tables(spark, sf_dir, partitions=2, bytes_per_split=1)
     set_input_mode("parquet")
-    after = _persistent_rdd_ids(spark)
+    after = persistent_rdd_ids()
     assert after - base, "cache_base_tables left nothing persisted"
     uncache_base_tables(spark)
-    assert _persistent_rdd_ids(spark) - base == set()
+    assert persistent_rdd_ids() - base == set()
 
 
 def test_recache_after_uncache_serves_fresh_plan(spark, sf_dir):
@@ -936,7 +935,7 @@ def test_bench_cli_prints_result_line(sf_dir):
     assert leftovers() == before
 
 
-def test_char_lm_rebuild_never_reuses_previous_cache(spark, sf_dir):
+def test_char_lm_rebuild_never_reuses_previous_cache(spark, sf_dir, persistent_rdd_ids):
     """char_lm persists its trigram stream so fit+score share one
     explode WITHIN a build. Across builds the pin must hold: each
     rebuild unpersists the predecessor (Spark's CacheManager matches
@@ -947,14 +946,13 @@ def test_char_lm_rebuild_never_reuses_previous_cache(spark, sf_dir):
     cached tris no matter how many times the builder runs."""
     from utils_infra_spark.pipeline.text import char_trigram_lm_scores
     from utils_infra_spark.sources import load_table
-    from utils_infra_spark.sources.tables import _persistent_rdd_ids
 
     spark.catalog.clearCache()
-    base = len(_persistent_rdd_ids(spark))
+    base = len(persistent_rdd_ids())
     docs = load_table(spark, sf_dir, "documents")
     for _ in range(3):
         char_trigram_lm_scores(docs, "text", "doc_id").collect()
-    assert len(_persistent_rdd_ids(spark)) <= base + 1
+    assert len(persistent_rdd_ids()) <= base + 1
     spark.catalog.clearCache()
 
 

@@ -9,6 +9,8 @@ cluster defaults untouched.
 
 from __future__ import annotations
 
+import os
+
 from utils_infra_spark.session import TINY_INPUT_BYTES, tune_for_input
 
 
@@ -69,28 +71,24 @@ def test_registry_index_is_current():
     assert gen_registry_index.build_index() == committed
 
 
-def test_checkpoint_with_ids_attributes_exactly_its_own_rdd(spark):
+def test_checkpoint_with_ids_attributes_exactly_its_own_rdd(spark, persistent_rdd_ids):
     """The returned id set must be exactly the persistent RDD the
     checkpoint registered (read off the LogicalRDD plan — no global
     diff), for both lazy and eager forms, and unpersist_rdd_ids must
     actually free those blocks (Dataset.unpersist would be a no-op)."""
-    from utils_infra_spark.sources.tables import (
-        _persistent_rdd_ids,
-        checkpoint_with_ids,
-        unpersist_rdd_ids,
-    )
+    from utils_infra_spark.sources.tables import checkpoint_with_ids, unpersist_rdd_ids
 
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids()
     df = spark.range(1000).selectExpr("id", "id % 7 AS k").groupBy("k").count()
     lazy, lazy_ids = checkpoint_with_ids(df, eager=False)
     eager, eager_ids = checkpoint_with_ids(spark.range(50), eager=True)
     assert len(lazy_ids) == 1 and len(eager_ids) == 1 and lazy_ids != eager_ids
     # both registrations are visible in the JVM persistent map and are NEW
-    now = _persistent_rdd_ids(spark)
+    now = persistent_rdd_ids()
     assert lazy_ids | eager_ids <= now - before
     assert lazy.count() == 7  # materializing the lazy one changes nothing
     unpersist_rdd_ids(spark, lazy_ids | eager_ids)
-    assert (lazy_ids | eager_ids) & _persistent_rdd_ids(spark) == set()
+    assert (lazy_ids | eager_ids) & persistent_rdd_ids() == set()
 
 
 def test_spread_memo_records_and_reuses_decision(spark):
@@ -224,3 +222,16 @@ def test_library_env_vars_are_deployment_only():
                 ):
                     keys.add(key(node.args[0]))
     assert keys == {"SPARK_GRAFT_CPUS", "SPARK_MASTER", "SPARK_DRIVER_MEMORY"}
+
+
+def test_default_driver_memory_is_half_of_physical_within_bounds():
+    """The library's default heap leaves half the machine as headroom,
+    never drops below 1 GiB and never exceeds 24 GiB; no JVM starts."""
+    from utils_infra_spark.session import default_driver_memory
+
+    gib = 1024**3
+    assert default_driver_memory(15 * gib) == "7680m"
+    assert default_driver_memory(64 * gib) == "24576m"
+    assert default_driver_memory(1 * gib) == "1024m"
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert default_driver_memory() == default_driver_memory(host)

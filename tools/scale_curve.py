@@ -25,8 +25,8 @@ Three tables:
 The output is one JSON line with the check's facts, every raw sample
 and the warm medians, IQRs and Spark/DuckDB median ratio.
 
-The topk_q_* curves measure the |Q| crossover behind
-`similarity.TOPK_CODEGEN_MAX_QUERIES`: n is the query count, the
+The topk_q_* curves measure the |Q| crossover between the all-JVM
+codegen top-k and the Arrow matmul kernel: n is the query count, the
 candidate corpus is a fixed 2,048 generated vectors (the crossover was
 first measured on the sf0.1 test embeddings, 2,000 valid vectors), and
 codegen-vs-Arrow is read by comparing the two curves' Spark medians at

@@ -847,77 +847,52 @@ def _hex16(hex_col_sql: str, j: int) -> str:
     return f"({nib(a)} * 4096 + {nib(a + 1)} * 256 + {nib(a + 2)} * 16 + {nib(a + 3)})"
 
 
-def bloom_novelty(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    split_id: int,
-    *,
-    k: int = 4,
-    sharded: int | None = None,
-    with_exact: bool = True,
-) -> DataFrame:
+def bloom_novelty(df: DataFrame, text_col: str, id_col: str, split_id: int) -> DataFrame:
     """Incremental-ingest dedup via a Bloom filter: docs with
     ``id <= split_id`` are the existing CORPUS, the rest are the new
-    INCREMENT; each increment doc is flagged ``maybe_seen`` (all k of
+    INCREMENT; each increment doc is flagged ``maybe_seen`` (all 4 of
     its Bloom positions set by the corpus — Bloom "probably present")
-    and, with ``with_exact``, ``exact_seen`` (its text literally
-    occurs in the corpus). A Bloom filter never false-negatives, so
-    ``exact_seen ⇒ maybe_seen`` invariantly; the gap between the two
-    flags is the measured false-positive set.
+    and ``exact_seen`` (its text literally occurs in the corpus). A
+    Bloom filter never false-negatives, so ``exact_seen ⇒ maybe_seen``
+    invariantly; the gap between the two flags is the measured
+    false-positive set.
 
     The filter is m = 2^16 bits as 2048 32-bit words (32, not 64:
     DuckDB overflow-checks ``1 << 63`` on signed BIGINTs, so the
-    cross-engine-safe word width caps the shift at 31), k 16-bit
+    cross-engine-safe word width caps the shift at 31), k = 4 16-bit
     positions per document taken directly from slices of one md5(text)
     hex digest (:func:`_hex16` — engine-neutral, so the whole
     construction is oracle-checkable bit-for-bit). Build: explode
     corpus positions → groupBy word index (BOUNDED key space, 2048
     rows max) → ``bit_or`` of the position bits, map-side combined.
 
-    Two probe forms, verdict-identical (pinned by test):
-
-    * **Default (filter-as-scalar)**: the 2048 built words aggregate
-      into a ONE-ROW ``map<w, word>`` (8 KB) that reaches the probe
-      as a broadcast scalar cross-join; each increment row computes
-      its k positions and tests the bits IN-ROW against the map. No
-      probe-side explode, no aggregation, and no driver-side collect
-      — the plan stays declarative/cacheable and the filter build
-      re-executes inside every fresh QueryExecution (r6 shipped two
-      broadcast-JOIN builds plus a probe-side explode→bool_and agg;
-      this form deletes the probe agg and turns the filter join into
-      a scalar — same-session A/B at sf0.1: 0.427 s → 0.310 s warm).
-    * **``sharded=N`` (the 100 TB path)**: at 10^11 corpus digests a
-      useful filter needs m ≈ 10^12 bits (~125 GB) — neither
-      broadcastable nor collectable. The filter words stay a
-      DataFrame, sharded by the high bits of the word index
-      (digest-prefix: ``shard = w div ceil(2048/N)``), and the probe's
-      exploded positions co-partition on the same key, so each
-      position routes to exactly the shard owning its word — a
-      shuffled equi-join carrying (shard, w, 8-byte word) and
-      (doc_id, pos) pairs, never text; then ``bool_and`` per doc.
-      Shard-count guidance (measured on the parity fixtures, verified
-      verdict-equal 1..8 shards): pick N so each shard's word table
-      fits an executor's memory with headroom — at m = 10^12 bits and
-      512 MB/shard that is N ≈ 256; below ~10^9 bits sharding only
-      adds a shuffle, so prefer the literal/broadcast form there.
+    Probe (filter-as-scalar): the 2048 built words aggregate into a
+    ONE-ROW ``map<w, word>`` (8 KB) that reaches the probe as a
+    broadcast scalar cross-join; each increment row computes its k
+    positions and tests the bits IN-ROW against the map. No probe-side
+    explode, no aggregation, and no driver-side collect — the plan
+    stays declarative and the filter build re-executes inside every
+    fresh QueryExecution (r6 shipped two broadcast-JOIN builds plus a
+    probe-side explode→bool_and agg; this form deletes the probe agg
+    and turns the filter join into a scalar — same-session A/B at
+    sf0.1: 0.427 s → 0.310 s warm).
 
     100 TB contract: the build is one corpus scan whose shuffle
     carries ≤ m/64 partial words per map task; the probe side never
-    shuffles the corpus text in either form. When the increment is a
-    large fraction of the corpus, fall back to the exact digest
-    anti-join instead.
+    shuffles the corpus text. The fixed 8 KB filter is what keeps the
+    probe a broadcast scalar; a corpus of 10^11 digests would need a
+    variable m (~10^12 bits) and a probe that routes positions to the
+    shard owning each word, neither of which exists here. When the
+    increment is a large fraction of the corpus, fall back to the
+    exact digest anti-join instead.
 
-    ``with_exact`` is MEASUREMENT SCAFFOLDING: broadcasting the
-    distinct corpus texts is only sane at verification scale (it is
-    orders of magnitude larger than the filter). At 100 TB drop it —
-    the Bloom verdict IS the product — or replace with a digest
-    anti-join when exactness is required; it exists so the FP
-    measurement stays a one-liner at test scale.
+    ``exact_seen`` broadcasts the distinct corpus texts, which is only
+    sane at verification scale (it is orders of magnitude larger than
+    the filter); it exists so the FP measurement stays a one-liner.
     """
     from ..sources.tables import spread
 
-    m_words = 2048  # m = 65536 bits in 32-bit words; positions are raw 16-bit md5 slices
+    k = 4  # positions per document; the DuckDB oracle hardcodes the same 4 slices
     # the md5 digest per row is CPU-bound work — spread the narrow
     # input so a single-partition cached scan can't serialize it
     base = spread(
@@ -944,63 +919,25 @@ def bloom_novelty(
         .groupBy("w")
         .agg(F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(b AS INT))) AS word"))
     )
-    if sharded is None:
-        # filter-as-scalar probe: the bounded word table collapses to a
-        # one-row map (8 KB regardless of corpus size) broadcast to the
-        # increment, then pure in-row position computation + bit tests
-        words_map = corpus_words.agg(
-            F.expr("map_from_entries(collect_list(struct(w, word))) AS __bwmap")
+    # the bounded word table collapses to a one-row map (8 KB
+    # regardless of corpus size) broadcast to the increment, then
+    # pure in-row position computation + bit tests
+    words_map = corpus_words.agg(
+        F.expr("map_from_entries(collect_list(struct(w, word))) AS __bwmap")
+    )
+    tests = " AND ".join(
+        f"((coalesce(element_at(__bwmap, p{j} div 32), 0L)"
+        f" & shiftleft(CAST(1 AS BIGINT), CAST(p{j} % 32 AS INT))) != 0)"
+        for j in range(k)
+    )
+    probes = (
+        base.where(F.col("doc_id") > split_id)
+        .selectExpr(
+            "doc_id", "__text", *[f"{p} AS p{j}" for j, p in enumerate(pos_sql)]
         )
-        tests = " AND ".join(
-            f"((coalesce(element_at(__bwmap, p{j} div 32), 0L)"
-            f" & shiftleft(CAST(1 AS BIGINT), CAST(p{j} % 32 AS INT))) != 0)"
-            for j in range(k)
-        )
-        probes = (
-            base.where(F.col("doc_id") > split_id)
-            .selectExpr(
-                "doc_id", "__text", *[f"{p} AS p{j}" for j, p in enumerate(pos_sql)]
-            )
-            .crossJoin(F.broadcast(words_map))
-            .selectExpr("doc_id", "__text", f"({tests}) AS maybe_seen")
-        )
-    else:
-        # digest-prefix sharded probe: filter words stay distributed,
-        # both sides co-partition on the shard owning each word. The
-        # exploded probe rows carry (doc_id, pos) ONLY — the document
-        # text is dropped BEFORE the join, so the word-routing shuffle
-        # and the per-doc bool_and reduction move 16-byte pairs, never
-        # text (the operator's 100 TB contract, pinned by plan test);
-        # with_exact rejoins text by doc_id afterwards at test scale.
-        span = (m_words + sharded - 1) // sharded
-        shard_words = corpus_words.selectExpr(f"w div {span} AS __shard", "w", "word").repartition(
-            sharded, "__shard"
-        )
-        positions = (
-            base.where(F.col("doc_id") > split_id)
-            .selectExpr("doc_id", "explode(array(" + ", ".join(pos_sql) + ")) AS pos")
-            .selectExpr("doc_id", "pos", "(pos div 32) AS w")
-            .withColumn("__shard", F.expr(f"w div {span}"))
-        )
-        verdicts = (
-            positions.join(shard_words, ["__shard", "w"], "left")
-            .select(
-                "doc_id",
-                F.coalesce(
-                    F.expr("(word & shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))) != 0"),
-                    F.lit(False),
-                ).alias("hit"),
-            )
-            .groupBy("doc_id")
-            .agg(F.expr("bool_and(hit) AS maybe_seen"))
-        )
-        if not with_exact:
-            return verdicts.select("doc_id", "maybe_seen")
-        probes = verdicts.join(
-            base.where(F.col("doc_id") > split_id).select("doc_id", "__text"), "doc_id"
-        )
-    if not with_exact:
-        return probes.select("doc_id", "maybe_seen")
+        .crossJoin(F.broadcast(words_map))
+        .selectExpr("doc_id", "__text", f"({tests}) AS maybe_seen")
+    )
     corpus_texts = base.where(F.col("doc_id") <= split_id).select("__text").distinct()
     return (
         probes.join(

@@ -359,101 +359,6 @@ def brute_force_topk_codegen(
     )
 
 
-# Measured crossover between the all-JVM codegen top-k and the Arrow
-# matmul twin (`tools/scale_curve.py topk_q_codegen|topk_q_arrow <|Q|>`):
-# the codegen plan carries |Q| literal arrays + |Q| aggregate columns,
-# so both its plan-construction and execution cost grow with |Q| while
-# the Arrow kernel's matmul is flat in |Q| — it decisively crosses by
-# |Q|≈32-64 in every measured regime, and codegen's only proven win
-# is the small-|Q| cached-input bench regime (see the two measured
-# tables in docs/SCALE.md, Round 11, before moving this).
-TOPK_CODEGEN_MAX_QUERIES = 32
-
-
-def brute_force_topk_auto(
-    queries: DataFrame,
-    candidates: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    round_dp: int = 6,
-    bucket_col: str | None = None,
-    in_dim: int | None = None,
-    codegen_max_queries: int = TOPK_CODEGEN_MAX_QUERIES,
-) -> DataFrame:
-    """One entry point for brute-force cosine top-k: picks
-    :func:`brute_force_topk_codegen` (all-JVM, zero Python crossings —
-    wins while the query set is small enough that |Q| literal arrays
-    stay planning-cheap) or :func:`brute_force_topk` (Arrow matmul —
-    wins once the batched BLAS amortizes its two fixed crossings, and
-    the only path that honors ``bucket_col``) by a MEASURED |Q|
-    threshold, removing the documented manual foot-gun.
-
-    Selection inputs (decided at plan-build time, both O(small)):
-    ``bucket_col`` forces the Arrow kernel (the codegen twin has no
-    bucket constraint); otherwise |Q| is counted with a bounded
-    ``limit(threshold+1)`` probe — never a full count of a large
-    query side — and compared against ``codegen_max_queries``. The
-    same probe infers ``in_dim`` for the codegen path when the caller
-    leaves it ``None`` (mixed query-vector lengths raise rather than
-    silently dropping the minority dimension).
-
-    Contract note (why the twins may differ in the last quantized
-    digit): the codegen path scores the INTEGER-quantized cosine
-    (every element floor(v·1e6+0.5) first — exact integer dots, one
-    IEEE division); the Arrow path matmuls raw doubles and quantizes
-    only the final cosine. Both are deterministic and partition-
-    invariant under their own contract; a caller pinning hash-exact
-    parity against an integer oracle must call the codegen twin
-    directly (the headliner query does).
-    """
-    if bucket_col is not None:
-        return brute_force_topk(
-            queries,
-            candidates,
-            vec_col=vec_col,
-            id_col=id_col,
-            k=k,
-            round_dp=round_dp,
-            bucket_col=bucket_col,
-        )
-    # The bounded probe doubles as the dimensionality sniff: the
-    # codegen twin gates rows on an explicit in_dim (documented
-    # contract), so an unspecified in_dim is INFERRED from the probed
-    # query vectors rather than defaulted — a 128-dim caller must not
-    # silently lose every query only at |Q| <= threshold.
-    probe = (
-        queries.select(F.size(F.col(vec_col)).alias("d"))
-        .limit(codegen_max_queries + 1)
-        .collect()
-    )
-    if len(probe) <= codegen_max_queries:
-        if in_dim is None:
-            dims = sorted({r["d"] for r in probe if r["d"] is not None and r["d"] > 0})
-            if len(dims) > 1:
-                raise ValueError(
-                    "brute_force_topk_auto: query vectors have mixed lengths "
-                    f"{dims}; pass in_dim explicitly to choose the codegen "
-                    "row-domain (other lengths are excluded by contract)"
-                )
-            # No non-empty query vector: the result is empty for any
-            # in_dim (output schema does not depend on it).
-            in_dim = dims[0] if dims else 1
-        return brute_force_topk_codegen(
-            queries,
-            candidates,
-            vec_col=vec_col,
-            id_col=id_col,
-            k=k,
-            round_dp=round_dp,
-            in_dim=in_dim,
-        )
-    return brute_force_topk(
-        queries, candidates, vec_col=vec_col, id_col=id_col, k=k, round_dp=round_dp
-    )
-
-
 def bucketed_pairs(
     df: DataFrame,
     *,
@@ -556,20 +461,6 @@ def sign_lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
     return bucket
 
 
-def centroids_by_key(df: DataFrame, *, vec_col: str = "embedding", key_col: str = "label") -> DataFrame:
-    """Per-key mean vector (IVF coarse codebook bootstrap): element-wise
-    array sum via aggregate over collected groups would not scale, so
-    this explodes to (key, pos, val) and re-assembles — one shuffle on
-    (key, pos), fully parallel."""
-    exploded = df.select(F.col(key_col).alias("key"), F.posexplode(_vec(vec_col)).alias("pos", "val"))
-    summed = exploded.groupBy("key", "pos").agg(F.avg("val").alias("mean_val"))
-    return (
-        summed.groupBy("key")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "mean_val"))).alias("pairs"))
-        .select("key", F.transform("pairs", lambda s: s["mean_val"]).alias("centroid"))
-    )
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -670,10 +561,8 @@ def ivf_topk(
     eq = spark.createDataFrame(
         expanded, f"{id_col} {dict(candidates.dtypes)[id_col]}, {vec_col} array<double>, list_id bigint"
     )
-    # Routed through the auto entry point so kernel selection lives in
-    # ONE place; bucket_col forces the Arrow kernel there (the codegen
-    # twin has no bucket constraint), with zero probe cost.
-    return brute_force_topk_auto(
+    # the Arrow kernel is the only one with a bucket constraint
+    return brute_force_topk(
         eq, assigned, vec_col=vec_col, id_col=id_col, k=k, round_dp=round_dp, bucket_col="list_id"
     )
 

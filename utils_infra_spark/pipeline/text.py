@@ -174,135 +174,6 @@ def pii_counts(text: Column | str) -> list[Column]:
     ]
 
 
-# ---------------------------------------------------------------------------
-# Intra-document repetition signals (Gopher-style quality rules).
-# Public-knowledge filters from Rae et al. 2021 ("Scaling Language
-# Models: ... Gopher", appendix A1.1) and the C4 cleanup rules:
-# documents dominated by repeated lines / paragraphs / n-grams are
-# boilerplate or spam and get filtered before training. Line and
-# paragraph fractions are per-row HOF folds over the split text —
-# O(L^2) in a document's LINE count (not its length), which is the
-# one-off-per-row case where an interpreted HOF is fine; the n-gram
-# signal gets a DataFrame-level operator instead because its natural
-# scale shape is explode + two bounded-key shuffles.
-
-
-def _nonempty_segments(text: Column | str, pattern: str) -> Column:
-    """Split on ``pattern``, trim each segment, drop empties."""
-    text = F.col(text) if isinstance(text, str) else text
-    segs = F.transform(F.split(text, pattern), lambda s: F.trim(s))
-    return F.filter(segs, lambda s: s != "")
-
-
-def dup_line_fraction(text: Column | str) -> Column:
-    """Fraction of lines that are repeats of an earlier line:
-    1 - distinct/total over trimmed non-empty lines (0.0 for <=1 line).
-    Gopher filters documents above 0.30."""
-    lines = _nonempty_segments(text, r"\n")
-    n = F.size(lines)
-    return F.when(n > 0, F.round((n - F.size(F.array_distinct(lines))) / n, 6)).otherwise(F.lit(0.0))
-
-
-def dup_paragraph_fraction(text: Column | str) -> Column:
-    """Same rule over blank-line-separated paragraphs (threshold 0.30)."""
-    paras = _nonempty_segments(text, r"\n{2,}")
-    n = F.size(paras)
-    return F.when(n > 0, F.round((n - F.size(F.array_distinct(paras))) / n, 6)).otherwise(F.lit(0.0))
-
-
-def dup_line_char_fraction(text: Column | str) -> Column:
-    """Fraction of CHARACTERS sitting in lines that occur more than
-    once (all occurrences counted — Gopher's char-weighted variant,
-    threshold 0.20). The inner occurrence count makes this O(L^2) in
-    the document's line count; adversarially line-heavy corpora should
-    use an explode + groupBy(doc, line) job instead."""
-    lines = _nonempty_segments(text, r"\n")
-    total = F.aggregate(lines, F.lit(0).cast("long"), lambda acc, s: acc + F.length(s))
-    dup_chars = F.aggregate(
-        F.array_distinct(lines),
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + F.when(
-            F.size(F.filter(lines, lambda y: y == s)) > 1,
-            F.size(F.filter(lines, lambda y: y == s)) * F.length(s),
-        ).otherwise(F.lit(0)),
-    )
-    return F.when(total > 0, F.round(dup_chars / total, 6)).otherwise(F.lit(0.0))
-
-
-def passes_repetition_filters(
-    text: Column | str,
-    *,
-    max_dup_line_frac: float = 0.30,
-    max_dup_para_frac: float = 0.30,
-    max_dup_line_char_frac: float = 0.20,
-) -> Column:
-    """Boolean keep/drop for the line-level Gopher repetition rules
-    (defaults are the published thresholds)."""
-    return (
-        (dup_line_fraction(text) <= max_dup_line_frac)
-        & (dup_paragraph_fraction(text) <= max_dup_para_frac)
-        & (dup_line_char_fraction(text) <= max_dup_line_char_frac)
-    )
-
-
-def top_ngram_stats(df, text_col: str, id_col: str, n: int = 2):
-    """Per document: the most frequent token n-gram and the fraction
-    of characters it covers (count x gram length / trimmed doc chars
-    — Gopher's "fraction of characters in the most common n-gram",
-    thresholds 0.20 / 0.18 / 0.16 for n = 2 / 3 / 4).
-
-    Scale shape: explode the n-grams (narrow projection over the
-    corpus scan), ONE shuffle on (doc, gram) for the counts, one
-    bounded shuffle on doc for the per-doc argmax via max_by — the
-    exchange carries (id, gram, count), never the text. Ties break to
-    the lexicographically greatest gram (struct max over (count,
-    gram) — deterministic across partitionings). Documents with fewer
-    than ``n`` tokens are kept with a null gram and 0.0 fraction.
-    """
-    toks = tokens(F.col(text_col))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    base = df.select(
-        F.col(id_col), F.length(F.trim(F.col(text_col))).alias("__chars"), grams.alias("__grams")
-    )
-    counts = (
-        base.select(id_col, "__chars", F.explode("__grams").alias("gram"))
-        .groupBy(id_col, "__chars", "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    top = counts.groupBy(id_col, "__chars").agg(
-        F.max_by(F.struct(F.col("cnt"), F.col("gram")), F.struct(F.col("cnt"), F.col("gram"))).alias("__top")
-    )
-    scored = top.select(
-        id_col,
-        F.col("__top.gram").alias("top_gram"),
-        F.col("__top.cnt").alias("top_gram_count"),
-        F.when(
-            F.col("__chars") > 0,
-            F.round(F.col("__top.cnt") * F.length("__top.gram") / F.col("__chars"), 6),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("top_gram_char_fraction"),
-    )
-    # keep short documents (no n-grams) with null gram / zero fraction
-    return (
-        df.select(id_col)
-        .join(scored, id_col, "left")
-        .select(
-            id_col,
-            "top_gram",
-            "top_gram_count",
-            F.coalesce("top_gram_char_fraction", F.lit(0.0)).alias("top_gram_char_fraction"),
-        )
-    )
-
-
 def char_entropy_stats(df, text_col: str, id_col: str):
     """Per-document Shannon entropy over characters (bits/char) — the
     cheap compressibility proxy for corpus quality: near-0 entropy is
@@ -600,9 +471,9 @@ def repetition_profile(df, text_col: str, id_col: str):
     reduction; paragraphs and token stats stay IN-ROW (array ops, no
     explode); one explode of 2-grams → (doc, gram) counts → per-doc
     row_number window whose partitions are single documents. The
-    line-stat shuffle carries (doc, line-text) once; unlike the in-row
-    ``dup_line_char_fraction`` HOF (O(lines²) per doc) this form is
-    linear and safe for adversarially line-heavy documents.
+    line-stat shuffle carries (doc, line-text) once; unlike an in-row
+    per-line occurrence count (O(lines²) per doc) this form is linear
+    and safe for adversarially line-heavy documents.
 
     Known single-node inefficiency, deliberately kept: the line
     explode, the paragraph/token projection, and the 2-gram explode

@@ -431,7 +431,7 @@ def quality_filter_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     import random
 
-    from ..pipeline.similarity import brute_force_topk_auto, sign_lsh_bucket
+    from ..pipeline.similarity import brute_force_topk, sign_lsh_bucket
 
     rng = random.Random(42)
     planes = [[rng.gauss(0, 1) for _ in range(64)] for _ in range(8)]
@@ -448,9 +448,8 @@ def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket") == F.col("qb"),
         "semi",
     )
-    # auto entry point: bucket_col forces the Arrow kernel (single
-    # call site for kernel selection — see brute_force_topk_auto)
-    return brute_force_topk_auto(
+    # the Arrow kernel is the only one with a bucket constraint
+    return brute_force_topk(
         queries.select("vec_id", "embedding", "bucket"), pruned, k=5, bucket_col="bucket"
     )
 
@@ -483,7 +482,7 @@ def sitrep_summarize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- IVF ANN
 def _ivf_centroids(nlist: int = 6, dim: int = 64, seed: int = 11) -> list[tuple[int, list[float]]]:
     """Deterministic literal codebook (the IVF contract: nlist ≪ N;
-    a trained codebook would come from centroids_by_key — literals
+    a trained codebook would come from label_centroids — literals
     keep the oracle SQL-expressible)."""
     import random
 

@@ -93,6 +93,22 @@ def is_tiny_input(spark: SparkSession) -> bool:
         return False
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half of physical memory (read
+    when ``phys_bytes`` is None), at least 1 GiB and at most 24 GiB.
+
+    In local mode the driver is the executor, so its heap holds every
+    task and broadcast; the other half of the machine is headroom for
+    what the JVM keeps outside its heap (metaspace, code cache, direct
+    buffers) and for the Python driver and workers. A fixed 24g heap
+    on a 16 GB host grew until the kernel killed the JVM.
+    """
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_mb = phys_bytes // (1024 * 1024) // 2
+    return f"{max(1024, min(24 * 1024, half_mb))}m"
+
+
 def get_spark(app_name: str = "utils-infra-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
@@ -121,10 +137,12 @@ def get_spark(app_name: str = "utils-infra-spark", cpus: int | None = None) -> S
         .config("spark.sql.parquet.filterPushdown", "true")
         # --- deterministic session TZ so date math is reproducible ---
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode: the driver IS the executor — size the heap for
-        # 32 concurrent tasks + accumulated broadcasts (GC thrash at
-        # 8g showed up as 10x query-time variance in long sessions)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # local mode: the driver IS the executor (see
+        # default_driver_memory for the sizing rule)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         # UI off: it costs ~50 MB + a jetty thread per session
         .config("spark.ui.enabled", "false")
     )

@@ -163,15 +163,6 @@ def cache_base_tables(
     return placed
 
 
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of this context's persisted RDDs (JVM block-manager view)."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return set(jmap.keySet().toArray())
-    except Exception:
-        return set()
-
-
 def checkpoint_with_ids(df: DataFrame, *, eager: bool = True) -> tuple[DataFrame, set[int]]:
     """``df.localCheckpoint(eager)`` plus the id(s) of the persistent
     RDD it registered — the handle a later owner-side unpersist needs
@@ -370,15 +361,13 @@ def write_bucketed(
     per bucket file); both tables must use identical n_buckets and
     bucket_cols or Spark silently falls back to exchanging the
     mismatched side.
+
+    Read the table back with ``spark.table(name)``: the bucketing
+    metadata lives in the catalog entry, not the parquet files, so a
+    plain ``spark.read.parquet(path)`` loses it and re-shuffles.
     """
     writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort:
         writer = writer.sortBy(*bucket_cols)
     writer.option("path", path).format("parquet").saveAsTable(name)
 
-
-def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
-    """Read a bucketed table back through the catalog (the bucketing
-    metadata lives in the catalog entry, not the parquet files — a
-    plain spark.read.parquet(path) would lose it and re-shuffle)."""
-    return spark.table(name)
