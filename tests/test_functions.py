@@ -353,7 +353,7 @@ def test_point_in_polygon_unrolled_matches_hof_fold(spark):
     # the plan-time-literal unrolling must agree with the HOF fold on
     # a concave ring, on an open (unclosed) ring, near edges, and on
     # an empty ring (which contains nothing)
-    from utils_infra_spark.functions.geo import point_in_polygon_unrolled_sql
+    from utils_infra_spark.functions.geo import point_in_polygon_unrolled
 
     coords = [(0, 0), (10, 0), (10, 4), (4, 4), (4, 10), (0, 10), (0, 0)]
     ring_col = F.array(*[F.struct(F.lit(float(x)).alias("x"), F.lit(float(y)).alias("y")) for x, y in coords])
@@ -362,12 +362,13 @@ def test_point_in_polygon_unrolled_matches_hof_fold(spark):
         [(5.0, 5.0), (2.0, 8.0), (8.0, 2.0), (-1.0, -1.0), (3.9, 9.9), (4.1, 9.9), (9.9, 3.9)],
         "lon double, lat double",
     )
+    lon, lat = F.col("lon"), F.col("lat")
     rows = pts.select(
-        point_in_polygon(F.col("lon"), F.col("lat"), ring_col).alias("a"),
-        F.expr(point_in_polygon_unrolled_sql("lon", "lat", coords)).alias("b"),
-        F.expr(point_in_polygon_unrolled_sql("lon", "lat", coords[:-1])).alias("b_open"),
-        point_in_polygon(F.col("lon"), F.col("lat"), empty_ring).alias("a_empty"),
-        F.expr(point_in_polygon_unrolled_sql("lon", "lat", [])).alias("b_empty"),
+        point_in_polygon(lon, lat, ring_col).alias("a"),
+        point_in_polygon_unrolled(lon, lat, coords).alias("b"),
+        point_in_polygon_unrolled(lon, lat, coords[:-1]).alias("b_open"),
+        point_in_polygon(lon, lat, empty_ring).alias("a_empty"),
+        point_in_polygon_unrolled(lon, lat, []).alias("b_empty"),
     ).collect()
     for r in rows:
         assert r.a == r.b == r.b_open
@@ -395,7 +396,7 @@ def test_point_in_polygon_open_ring_all_variants_agree(spark):
     edge the even-odd count is 1 and it reads inside."""
     from pyspark.sql import functions as F
 
-    from utils_infra_spark.functions.geo import point_in_polygon, point_in_polygon_unrolled_sql
+    from utils_infra_spark.functions.geo import point_in_polygon, point_in_polygon_unrolled
 
     open_sq = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
     closed_sq = open_sq + [open_sq[0]]
@@ -404,7 +405,7 @@ def test_point_in_polygon_open_ring_all_variants_agree(spark):
     for coords in (open_sq, closed_sq):
         ring = F.array(*[F.struct(F.lit(x).alias("x"), F.lit(y).alias("y")) for x, y in coords])
         got_hof = [r[0] for r in df.select(point_in_polygon(F.col("x"), F.col("y"), ring)).collect()]
-        got_unr = [r[0] for r in df.select(F.expr(point_in_polygon_unrolled_sql("x", "y", coords))).collect()]
+        got_unr = [r[0] for r in df.select(point_in_polygon_unrolled(F.col("x"), F.col("y"), coords)).collect()]
         want = [w for _, _, w in pts]
         assert got_hof == got_unr == want, (coords, got_hof, got_unr)
 

@@ -255,7 +255,6 @@ def test_prepared_plan_cache_reserves_same_object(spark, sf_dir):
     # a DataFrame is an immutable logical plan, so re-serving it is
     # semantically a no-op that skips only driver-side rebuild cost
     q = REGISTRY["pricing_summary"]
-    q.plan(spark, sf_dir)  # a first build may read lineitem's footer: a job, not cached
     a = q.plan(spark, sf_dir)
     b = q.plan(spark, sf_dir)
     assert a is b
@@ -753,7 +752,6 @@ def test_uncacheable_plan_rebuilds_per_call(spark, sf_dir):
     q = REGISTRY["char_lm_quality_documents"]
     assert q.plan(spark, sf_dir) is not q.plan(spark, sf_dir)
     qc = REGISTRY["pricing_summary"]
-    qc.plan(spark, sf_dir)  # a first build may read lineitem's footer: a job, not cached
     assert qc.plan(spark, sf_dir) is qc.plan(spark, sf_dir)
 
 
@@ -779,15 +777,81 @@ def test_registry_reserves_only_job_free_builds(spark, sf_dir):
     """bloom's split and the top-k query-vector collect run jobs at
     build, so their plans are rebuilt per call. The literal micro-dim
     fold is the one exception: its jobs carry FOLD_TAG, so the two
-    literal-map builders stay cached. The first call may read table
-    footers (a job), so re-serving is checked from the second call."""
+    literal-map builders stay cached."""
     for name in ("bloom_novelty_documents", "embedding_topk_cosine"):
         q = REGISTRY[name]
         assert q.plan(spark, sf_dir) is not q.plan(spark, sf_dir), name
     for name in ("enrich_customer_nation", "nation_revenue"):
         q = REGISTRY[name]
-        q.plan(spark, sf_dir)
         assert q.plan(spark, sf_dir) is q.plan(spark, sf_dir), name
+
+
+def _job_ids_during(spark, fn):
+    """fn()'s result and the ids of the Spark jobs it ran (job tag)."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"test-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return out, list(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def test_load_table_schema_equals_inference_without_a_job(spark, sf_dir, tmp_path):
+    """load_table reads one footer on the driver: for every table file,
+    for nanosecond events.ts (read as long, converted to a microsecond
+    timestamp) and for a Spark-written table directory, its schema
+    equals what spark.read.parquet infers, and the read runs no job. A
+    sibling session starts with an empty table cache, so every read
+    here is a first read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampType
+
+    from utils_infra_spark.sources.tables import TABLE_NAMES, load_table
+
+    fresh = spark.newSession()
+    got, jobs = _job_ids_during(fresh, lambda: {t: load_table(fresh, sf_dir, t) for t in TABLE_NAMES})
+    assert jobs == []
+    for t in TABLE_NAMES:
+        assert got[t].schema == fresh.read.parquet(f"{sf_dir}/{t}.parquet").schema, t
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    nanos = events.set_column(
+        events.schema.get_field_index("ts"), "ts", events["ts"].cast(pa.timestamp("ns"))
+    )
+    pq.write_table(nanos, tmp_path / "events.parquet")
+    ev, jobs = _job_ids_during(fresh, lambda: load_table(fresh, str(tmp_path), "events"))
+    assert jobs == []
+    inferred = fresh.read.parquet(str(tmp_path / "events.parquet"))
+    assert dict(inferred.dtypes)["ts"] == "bigint"
+    assert ev.schema == inferred.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))).schema
+    assert isinstance(ev.schema["ts"].dataType, TimestampType)
+    as_text = lambda df: sorted(r[0] for r in df.select(F.col("ts").cast("string")).collect())  # noqa: E731
+    assert as_text(ev) == as_text(got["events"])
+
+    spark_dir = tmp_path / "spark_written"
+    got["events"].repartition(3).write.parquet(str(spark_dir / "events.parquet"))
+    ev, jobs = _job_ids_during(fresh, lambda: load_table(fresh, str(spark_dir), "events"))
+    assert jobs == []
+    assert ev.schema == fresh.read.parquet(str(spark_dir / "events.parquet")).schema
+    assert ev.count() == got["events"].count()
+
+
+def test_fresh_session_reserves_table_reading_plans(spark, sf_dir):
+    """A session that never preloaded its tables (the driver contract's
+    vanilla session) builds a table-reading query once: the first
+    build reads footers without a job, so its plan is re-served."""
+    fresh = spark.newSession()
+    for name in ("enrich_customer_nation", "quality_decile_stats", "last_nonnull_state_events"):
+        q = REGISTRY[name]
+        assert q.plan(fresh, sf_dir) is q.plan(fresh, sf_dir), name
 
 
 def test_dup_span_coverage_shuffles_hashes_not_text(spark, sf_dir):

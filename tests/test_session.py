@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from utils_infra_spark.session import TINY_INPUT_BYTES, tune_for_input
 
 
@@ -235,3 +237,19 @@ def test_default_driver_memory_is_half_of_physical_within_bounds():
     assert default_driver_memory(1 * gib) == "1024m"
     host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert default_driver_memory() == default_driver_memory(host)
+
+
+def test_get_spark_turns_off_python_call_site_capture(spark):
+    """get_spark sessions skip PySpark's call-site capture on every
+    Column call. An ANSI runtime error still raises with its error
+    class; only the Python file:line of its DataFrame query context
+    goes."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.lit(1) / F.col("id")).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    sites = [c.callSite() for c in err.value.getQueryContext()]
+    assert not any(os.path.basename(__file__) in (s or "") for s in sites), sites

@@ -10,7 +10,9 @@ polygon edge list, expressed with higher-order functions — no UDF.
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -134,7 +136,7 @@ def point_in_polygon(lon: Column, lat: Column, ring: Column) -> Column:
     return F.when(n == 0, F.lit(False)).otherwise((hits % 2) == 1)
 
 
-def point_in_polygon_unrolled_sql(lon: str, lat: str, coords: list[tuple[float, float]]) -> str:
+def point_in_polygon_unrolled(lon: Column, lat: Column, coords: list[tuple[float, float]]) -> Column:
     """Ray-cast against a ring KNOWN AT PLAN TIME, unrolled per edge.
 
     Spark's higher-order functions are CodegenFallback — the
@@ -149,19 +151,19 @@ def point_in_polygon_unrolled_sql(lon: str, lat: str, coords: list[tuple[float, 
     """
     pts = [(float(x), float(y)) for x, y in coords]
     if not pts:
-        return "false"  # empty ring contains nothing (degenerate input)
+        return F.lit(False)  # empty ring contains nothing (degenerate input)
     if pts[0] != pts[-1]:
         pts.append(pts[0])  # close an open ring, like the runtime fold's modulo wrap does
-    terms = []
+    hits = []
     for (xi, yi), (xj, yj) in zip(pts, pts[1:]):
         if yi == yj:
             continue  # horizontal edge can never straddle lat
-        straddles = f"(({yi!r}D > {lat}) != ({yj!r}D > {lat}))"
-        x_int = f"(({xj!r}D - {xi!r}D) * ({lat} - {yi!r}D) / ({yj!r}D - {yi!r}D) + {xi!r}D)"
-        terms.append(f"(CASE WHEN {straddles} AND ({lon} < {x_int}) THEN 1 ELSE 0 END)")
-    if not terms:
-        return "false"
-    return f"(({' + '.join(terms)}) % 2 = 1)"
+        straddles = (lat < yi) != (lat < yj)
+        x_int = F.lit(xj - xi) * (lat - yi) / (yj - yi) + xi
+        hits.append(F.when(straddles & (lon < x_int), 1).otherwise(0))
+    if not hits:
+        return F.lit(False)
+    return (functools.reduce(operator.add, hits) % 2) == 1
 
 
 def bilinear_interpolate(grid: Column, lon: Column, lat: Column, *, west: float, south: float, dlon: float, dlat: float) -> Column:

@@ -18,7 +18,7 @@ from ..functions.geo import (
     mercator_y,
     morton_key,
     morton_key_sql,
-    point_in_polygon_unrolled_sql,
+    point_in_polygon_unrolled,
 )
 from ..sources import load_table
 from . import register
@@ -97,15 +97,13 @@ def point_in_polygon_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer = [(-15, -15), (15, -15), (15, 15), (-15, 15), (-15, -15)]
     # rings are plan-time literals → unrolled per edge into codegen'd
     # arithmetic (the HOF fold is CodegenFallback, ~10x slower)
-    in_core = point_in_polygon_unrolled_sql("lon", "lat", core)
-    in_outer = point_in_polygon_unrolled_sql("lon", "lat", outer)
+    lon, lat = F.col("lon"), F.col("lat")
+    in_core = point_in_polygon_unrolled(lon, lat, core)
+    in_outer = point_in_polygon_unrolled(lon, lat, outer)
     # first-match-wins priority: ring (outer minus core) checked first,
     # like the reference's ordered feature scan
-    region = (
-        f"CASE WHEN {in_outer} AND NOT {in_core} THEN 'ring' "
-        f"WHEN {in_core} THEN 'core' ELSE 'outside' END AS region"
-    )
-    return pts.selectExpr("c_custkey", "lon", "lat", region)
+    region = F.when(in_outer & ~in_core, "ring").when(in_core, "core").otherwise("outside")
+    return pts.select("c_custkey", "lon", "lat", region.alias("region"))
 
 
 @register(

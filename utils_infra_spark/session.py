@@ -145,6 +145,13 @@ def get_spark(app_name: str = "utils-infra-spark", cpus: int | None = None) -> S
         )
         # UI off: it costs ~50 MB + a jetty thread per session
         .config("spark.ui.enabled", "false")
+        # call-site capture off: with it on, every pyspark.sql.functions
+        # call and Column operator walks the Python stack and makes ~5
+        # extra Py4J round trips (and the first one imports IPython,
+        # ~0.3 s of CPU). Runtime errors keep their error class and
+        # message; only the Python file:line "DataFrame query context"
+        # goes.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

@@ -2,9 +2,10 @@
 
 At 100 TB the fact tables (lineitem / orders / events / documents /
 embeddings) are partitioned parquet or Iceberg/Delta; the loaders
-here are plain ``spark.read.parquet`` so Catalyst gets predicate
-pushdown + column pruning on every scan (verify with
-``df.explain('formatted')`` → ``PushedFilters`` / ``ReadSchema``).
+here are parquet scans with the schema supplied up front
+(:func:`footer_schema`), so Catalyst gets predicate pushdown + column
+pruning on every scan (verify with ``df.explain('formatted')`` →
+``PushedFilters`` / ``ReadSchema``) and no schema-inference job runs.
 Dimension tables (region, nation, supplier, part at small sf) stay
 under the broadcast threshold and join map-side.
 """
@@ -13,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,11 +37,12 @@ TABLE_NAMES = (
 # Session slots (utils_infra_spark.session): "tables" maps
 # (sf_dir, name) -> the parquet DataFrame. A DataFrame is an immutable
 # logical plan, so handing the same object to every query is safe and
-# skips the per-read file listing + footer read (~80 ms each on the
-# driver — pure fixed overhead that multiplies by tables-per-query ×
-# queries-per-session). "input" maps (sf_dir, name) -> (DataFrame,
-# persistent RDD ids): eager localCheckpoint()s of the repartitioned
-# base tables, materialized once into the block manager (the moral
+# skips the per-read file listing, footer read and relation analysis
+# (~10 ms per table on the driver once the JVM is warm — pure fixed
+# overhead that multiplies by tables-per-query × queries-per-session).
+# "input" maps (sf_dir, name) -> (DataFrame, persistent RDD ids):
+# eager localCheckpoint()s of the repartitioned base tables,
+# materialized once into the block manager (the moral
 # analog of a buffer pool: INPUT caching, never result/shuffle
 # caching; every query over it still runs its full task counts, see
 # tests/test_plans.py::test_cached_input_fresh_select_reexecutes).
@@ -68,12 +71,20 @@ def set_input_mode(mode: str) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. Schema comes from parquet footers (no inference cost).
+    """Read one table; the schema comes from one parquet footer read on
+    the driver (:func:`footer_schema`), so the read runs no Spark job.
+
+    Without a schema, ``spark.read.parquet`` infers one with a
+    distributed job (``mergeSchemasInParallel``) even for one file:
+    ~130 ms per table, and ``Query.plan`` re-serves only plans whose
+    build ran no job, so a query that first read a table would be built
+    again on its next call.
 
     Spark 4 rejects TIMESTAMP(NANOS) parquet columns (PARQUET_TYPE_ILLEGAL),
-    and the driver's `events.ts` is nanos — so nanos read as long
-    (legacy conf, set here so any session works) and convert to a
-    microsecond TIMESTAMP, matching DuckDB's own ns→us truncation.
+    and the driver's `events.ts` may be nanos — so nanos read as long
+    (legacy conf, set here so any session works, before the footer is
+    converted) and convert to a microsecond TIMESTAMP, matching DuckDB's
+    own ns→us truncation.
     """
     key = (os.path.abspath(sf_dir), name)
     if _input_mode == "cached":
@@ -85,11 +96,85 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    reader = spark._jsparkSession.read().schema(footer_schema(spark, path))
+    df = DataFrame(reader.format("parquet").load(path), spark)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     per[key] = df
     return df
+
+
+def footer_schema(spark: SparkSession, path: str) -> JavaObject:
+    """The data schema ``spark.read.parquet(path)`` infers (mergeSchema
+    off), as a JVM StructType, read from ONE footer on the driver.
+
+    ``path`` is a file or a table directory. The footer is the one
+    inference reads: the file itself; for a directory its
+    ``_common_metadata`` or ``_metadata`` summary file, else its first
+    data file in path order (:func:`_first_data_file`). It is converted
+    by Spark's own ``ParquetFileFormat.readSchemaFromFooter`` — which
+    prefers the schema a Spark writer stores in the footer's key-value
+    metadata — with a converter built from the session's SQL conf
+    (``nanosAsLong``, ``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ``). Partition columns are not in any footer:
+    the reader's partition discovery adds them.
+    """
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    file = jvm.org.apache.hadoop.fs.Path(path)
+    fs = file.getFileSystem(conf)
+    if fs.getFileStatus(file).isDirectory():
+        file = _schema_file(fs, file)
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    metadata = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    return parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(file, metadata),
+        parquet.ParquetToSparkSchemaConverter(state.conf()),
+    )
+
+
+def _schema_file(fs: JavaObject, root: JavaObject) -> JavaObject:
+    """The file of table directory ``root`` whose footer inference
+    reads: a summary file at the root, else the first data file."""
+    for summary in ("/_common_metadata", "/_metadata"):
+        path = root.suffix(summary)
+        if fs.exists(path):
+            return path
+    first = _first_data_file(fs, root)
+    if first is None:
+        raise FileNotFoundError(f"no parquet data file under {root.toString()}")
+    return first
+
+
+def _first_data_file(fs: JavaObject, directory: JavaObject) -> JavaObject | None:
+    """The first file under ``directory`` in full-path order, skipping
+    the names Spark's file listing hides (``HadoopFSUtils.
+    shouldFilterOutPathName``: a leading ``.``, a leading ``_`` unless
+    the name has ``=``, a ``._COPYING_`` suffix) and the summary
+    files. A directory sorts as its name plus ``/``, the prefix of
+    every path under it, so the depth-first walk meets files in the
+    order inference's sorted listing does, and lists only the
+    directories on the way to the first file."""
+    entries = []
+    for status in fs.listStatus(directory):
+        path = status.getPath()
+        name = path.getName()
+        hidden = name.startswith(".") or (name.startswith("_") and "=" not in name) or name.endswith("._COPYING_")
+        if not hidden:
+            is_dir = status.isDirectory()
+            entries.append((name + "/" if is_dir else name, is_dir, path))
+    for _key, is_dir, path in sorted(entries, key=lambda e: e[0]):
+        if not is_dir:
+            return path
+        found = _first_data_file(fs, path)
+        if found is not None:
+            return found
+    return None
 
 
 # cached-copy split sizing: one block-manager partition per this many
